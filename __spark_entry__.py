@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from newscrawl.queries import QUERIES
+from newscrawl.queries import QUERIES, session_memo
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -58,32 +58,22 @@ def entry(spark: SparkSession) -> DataFrame:
     ).orderBy("source", "lang")
 
 
-# one deterministic 2-wave crawl per session feeds BOTH engine rows
-# (crawl_wave_articles and corpus_prepare_crawled) — keyed by
-# applicationId like the queries.py frame caches
-_ENTRY_CATALOGS: dict[str, object] = {}
-
-# the crawled-docs frame of _corpus_prepare_crawled, one persisted copy
-# per applicationId (ADVICE r6 — repeated invocations leaked one cached
-# frame each)
-_ENTRY_DOCS: dict[str, object] = {}
-
-
 def _entry_catalog(spark: SparkSession):
+    """One deterministic 2-wave crawl per session, session-memoized: it
+    feeds BOTH engine rows (crawl_wave_articles and
+    corpus_prepare_crawled)."""
     from newscrawl import synth, wave
     from newscrawl.storage import ManifestParquetCatalog
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _ENTRY_CATALOGS if k != app]:
-        _ENTRY_CATALOGS.pop(k)
-    if app not in _ENTRY_CATALOGS:
+    def crawl():
         cfg = synth.SynthConfig(n_seed=2, n_total=12, n_waves=2)
         catalog = ManifestParquetCatalog(
             tempfile.mkdtemp(prefix="newscrawl_entry_")
         )
         wave.run_crawl(spark, catalog, cfg)
-        _ENTRY_CATALOGS[app] = catalog
-    return _ENTRY_CATALOGS[app]
+        return catalog
+
+    return session_memo(spark, "entry_catalog", crawl)
 
 
 def _crawl_wave_articles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,16 +126,16 @@ def _corpus_prepare_crawled(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference-oracle crawl output."""
     from newscrawl import wave
 
-    # memoized per applicationId like _ENTRY_CATALOGS (ADVICE r6): a
-    # per-call persist() with no unpersist leaked one cached frame per
-    # driver invocation within a session
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _ENTRY_DOCS if k != app]:
-        _ENTRY_DOCS.pop(k)
-    docs = _ENTRY_DOCS.get(app)
-    if docs is None:
-        arts = wave.read_articles(spark, _entry_catalog(spark))
-        docs = arts.select(
+    # session-memoized (a per-call persist() with no unpersist leaked one
+    # cached frame per driver invocation) and keyed on the catalog's
+    # current snapshot, so a later crawl into the same catalog rebuilds
+    # the frame instead of serving the old articles
+    catalog = _entry_catalog(spark)
+    docs = session_memo(
+        spark,
+        "entry_docs",
+        lambda: wave.read_articles(spark, catalog)
+        .select(
             F.conv(F.substring(F.md5("url"), 1, 15), 16, 10)
             .cast("long")
             .alias("doc_id"),
@@ -153,8 +143,11 @@ def _corpus_prepare_crawled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             "quality",
             "n_tokens",
-        ).persist()
-        _ENTRY_DOCS[app] = docs
+        )
+        .persist(),
+        catalog.root,
+        catalog.current_snapshot()["snapshot_id"],
+    )
     return _prepare_crawled_docs(spark, sf_dir, docs)
 
 

@@ -134,18 +134,24 @@ def _clear_orphan_table_dir(spark, table: str) -> None:
     """A warehouse directory surviving from a previous session while the
     (in-memory) metastore forgot the table makes saveAsTable fail with
     LOCATION_ALREADY_EXISTS — an orphan dir is never valid data for a
-    table the catalog doesn't know, so remove it."""
+    table the catalog doesn't know, so remove it.
+
+    The cleanup is scoped to THIS module's table namespace: with a
+    shared warehouse dir (concurrent bench/test sessions, or a
+    persistent metastore) an unscoped rmtree could delete another
+    session's live data for a table this session merely hasn't
+    registered (ADVICE r6) — so an unprefixed name is refused."""
+    if not table.lower().startswith("newscrawl_"):
+        raise ValueError(
+            f"table {table!r} must be named 'newscrawl_*': band-index tables"
+            " live in the newscrawl_ warehouse namespace, the only one whose"
+            " orphan directories this module may delete"
+        )
     if spark.catalog.tableExists(table):
         return
     import os
     import shutil
 
-    # scope the cleanup to THIS module's table namespace: with a shared
-    # warehouse dir (concurrent bench/test sessions, or a persistent
-    # metastore) an unscoped rmtree could delete another session's live
-    # data for a table this session merely hasn't registered (ADVICE r6)
-    if not table.lower().startswith("newscrawl_"):
-        return
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     for prefix in ("file://", "file:"):
         if wh.startswith(prefix):
@@ -161,7 +167,8 @@ def write_band_index_bucketed(
     by (band, key) — the storage layout the bucketed probe needs so the
     10^10-row history joins co-located with ZERO Exchange (the
     bucketing.py fetch-join pattern applied to the gate).  Appending a
-    wave's kept bands keeps the bucket spec."""
+    wave's kept bands keeps the bucket spec.  ``table`` must start with
+    ``newscrawl_`` (ValueError otherwise)."""
     _clear_orphan_table_dir(bands.sparkSession, table)
     (
         bands.write.bucketBy(n_buckets, "band", "key")

@@ -175,7 +175,10 @@ def clean_text(text: str | None) -> str:
     t = text
     if "http" in t:  # https?:// requires the literal 'http'
         t = _URL_IN_TEXT_RE.sub("", t)
-    low = t.lower()
+    # casefold, not lower: re.IGNORECASE also folds 'ſ' to 's', and the
+    # dotless/dotted 'ı'/'İ' to 'i' (casefold leaves 'ı' and gives 'İ' a
+    # combining dot; both replaces are free on ASCII text)
+    low = t.casefold().replace("\u0131", "i").replace("\u0307", "")
     if any(w in low for w in _JUNK_WORDS):  # \b<word>\b needs the word
         t = _JUNK_LINE_RE.sub("", t)
     if " \n" in t or "\t\n" in t or t[-1:] in (" ", "\t"):

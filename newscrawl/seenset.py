@@ -112,7 +112,8 @@ class BloomShardSet:
             self.counts[int(s)] = self.counts.get(int(s), 0) + len(hs)
 
     def merge(self, other: "BloomShardSet") -> "BloomShardSet":
-        assert (self.n_shards, self.m_bits, self.k) == (other.n_shards, other.m_bits, other.k)
+        if (self.n_shards, self.m_bits, self.k) != (other.n_shards, other.m_bits, other.k):
+            raise ValueError("cannot merge bloom shard sets of different shape")
         for s, bm in other.bitmaps.items():
             if s in self.bitmaps:
                 np.bitwise_or(self.bitmaps[s], bm, out=self.bitmaps[s])
@@ -261,7 +262,8 @@ class CuckooFilter:
     MAX_KICKS = 250
 
     def __init__(self, n_buckets: int = 1 << 14):
-        assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of two"
+        if n_buckets <= 0 or n_buckets & (n_buckets - 1):
+            raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
         self.n_buckets = n_buckets
         self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
         self.n_items = 0

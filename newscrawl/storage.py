@@ -334,7 +334,8 @@ class WaveCommit:
     def write(self, table: str, df: DataFrame, mode: str = "append") -> int:
         """Stage a table delta. mode='append' adds to the table's live file
         set; mode='overwrite' replaces it. Returns rows written."""
-        assert mode in ("append", "overwrite")
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
         out_dir = os.path.join(
             self.catalog.root, table, "data", f"{uuid.uuid4().hex[:12]}"
         )
@@ -389,7 +390,8 @@ class WaveCommit:
         round-trip costs ~0.3-0.5 s each against a single-digit-KB
         payload. pyarrow writes the parquet directly. Same lineage
         manifest entry as write(); same commit visibility rules."""
-        assert mode in ("append", "overwrite")
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
         import pyarrow as pa
         import pyarrow.parquet as pq
 

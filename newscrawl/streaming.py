@@ -62,6 +62,22 @@ def stream_crawl(
     re-numbered from 0) correctly reprocesses — new pages crawl, and
     already-crawled pages are absorbed by the seen-set anti-join.
     """
+    # LOCAL-CHECKPOINT ASSUMPTION (ADVICE r6): the lineage id below is
+    # read with plain local-filesystem IO; a remote checkpointLocation
+    # (hdfs://, s3a://) needs the Hadoop FS API instead — refuse it up
+    # front rather than fail with a confusing FileNotFoundError at the
+    # first micro-batch.  A file: URI is local once its scheme is gone.
+    if "://" in checkpoint_dir and not checkpoint_dir.startswith("file:"):
+        raise ValueError(
+            "stream_crawl reads the exactly-once lineage id via local"
+            f" file IO; remote checkpoint '{checkpoint_dir}' is not"
+            " supported (use a local checkpointLocation)"
+        )
+    local_ckpt = checkpoint_dir
+    for prefix in ("file://", "file:"):
+        if local_ckpt.startswith(prefix):
+            local_ckpt = local_ckpt[len(prefix):]
+            break
     reader = spark.readStream.schema(PAGES)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -85,27 +101,15 @@ def stream_crawl(
     # at the ARTICLE level via the seen-set anti-join (no duplicate
     # articles/seen/band rows); it may commit empty waves, which is the
     # correct price for never dropping new data.
-    ckpt_loc = os.path.join(checkpoint_dir, "stream")
+    ckpt_loc = os.path.join(local_ckpt, "stream")
     _lineage_box: dict[str, str | None] = {"v": None}
 
     def _lineage() -> str:
         # read lazily: Spark writes <ckpt>/metadata at query start,
         # which is before the first foreachBatch invocation.
-        # LOCAL-CHECKPOINT ASSUMPTION (ADVICE r6): this open() is plain
-        # local-filesystem IO; a remote checkpointLocation (hdfs://,
-        # s3a://) needs the Hadoop FS API instead — assert loudly
-        # rather than fail with a confusing FileNotFoundError at the
-        # first micro-batch.
         if _lineage_box["v"] is None:
             import json
 
-            assert "://" not in checkpoint_dir or checkpoint_dir.startswith(
-                "file:"
-            ), (
-                "stream_crawl reads the exactly-once lineage id via local"
-                f" file IO; remote checkpoint '{checkpoint_dir}' is not"
-                " supported (use a local checkpointLocation)"
-            )
             with open(os.path.join(ckpt_loc, "metadata")) as fh:
                 _lineage_box["v"] = str(json.load(fh)["id"])
         return _lineage_box["v"]

@@ -406,9 +406,8 @@ def main() -> None:
             "pmod(xxhash64(url), 16))` — no task ever sorts a whole hot\n"
             "host — and losslessly pre-prunes to `budget` rows per salt;\n"
             "phase 2 re-ranks at most `budget*16` rows per host for the\n"
-            "exact answer.  skew.salted_topk/salted_join generalize the\n"
-            "same pattern for ad-hoc use.\n"
-            "test_skew.py::test_engine_budget_gate_salted_equals_unsalted\n"
+            "exact answer.\n"
+            "test_politeness.py::test_engine_budget_gate_salted_equals_unsalted\n"
             "proves a budgeted 2-wave crawl over the skewed hot host is\n"
             "byte-identical with n_salts=16 and n_salts=1 (naive single\n"
             "Window).  Spark 4's WindowGroupLimit pushdown truncates each\n"

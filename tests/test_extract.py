@@ -52,6 +52,35 @@ def test_clean_text_removes_urls_and_junk_lines():
     assert ex.clean_text(None) == ""
 
 
+def test_clean_text_junk_probe_matches_regex_on_non_ascii():
+    """The junk-line fast path may only skip a regex pass that cannot
+    match: on text whose junk word is spelled with a character that
+    re.IGNORECASE folds to ASCII (long s, dotless/dotted i, Kelvin
+    sign), clean_text equals the unguarded regex chain."""
+    import re
+
+    def unguarded(text):
+        t = ex._URL_IN_TEXT_RE.sub("", text)
+        t = ex._JUNK_LINE_RE.sub("", t)
+        t = ex._TRAIL_SPACE_RE.sub("", t)
+        return ex._SQUEEZE_NL_RE.sub("\n\n", t).strip()
+
+    samples = ["\u017fubscribe now\nbody", "body\nfollow u\u017f here\ntail"]
+    # every single-character spelling the regex folds onto each letter
+    for word in ex._JUNK_WORDS:
+        for i, ch in enumerate(word):
+            if ch == " ":
+                continue
+            for cp in range(0x80, 0x2200):
+                c = chr(cp)
+                if re.fullmatch(ch, c, re.IGNORECASE):
+                    samples.append(f"{word[:i]}{c}{word[i + 1:]} now\nbody")
+    assert len(samples) > 10
+    for text in samples:
+        assert ex.clean_text(text) == unguarded(text), repr(text)
+    assert ex.clean_text("\u017fubscribe now\nbody") == "body"
+
+
 def test_skip_title_case_insensitive():
     assert ex.is_skip_title("SIGN UP FOR OUR NEWSLETTER today")
     assert not ex.is_skip_title("Normal headline")

@@ -175,7 +175,8 @@ def test_windowed_host_counts_watermark_drops_late(spark, tmp_path):
 
 def test_stream_crawl_forwards_webhook_and_scheduler(spark, tmp_path):
     """Micro-batch waves must honor the forwarded sink/scheduler options:
-    every streamed wave appends signed webhook rows and host_state."""
+    every streamed wave appends signed webhook rows and host_state.  The
+    checkpoint is given as a file:// URI, which is local storage too."""
     import hashlib
     import hmac as hmac_mod
 
@@ -190,7 +191,7 @@ def test_stream_crawl_forwards_webhook_and_scheduler(spark, tmp_path):
         spark,
         catalog,
         str(pages_dir),
-        str(tmp_path / "ckpt"),
+        "file://" + str(tmp_path / "ckpt"),
         scheduler="scaled",
         webhook_key=b"sk",
     )
