@@ -14,14 +14,16 @@ Headline components:
 - representative operator queries at $SPARK_GRAFT_SF_DIR.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), NEWSCRAWL_BENCH_SCALE (crawl corpus
-size multiplier, default 1).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on,
+``os.sched_getaffinity``), NEWSCRAWL_BENCH_SCALE (crawl corpus size
+multiplier, default 1).
 
 Scaling-efficiency evidence (north rule's two-cluster-size criterion,
 no real cluster in this sandbox): ``python bench.py --scaling`` runs one
-maximal crawl wave in fresh subprocesses pinned with taskset to 8 CPUs
-(N) and 32 CPUs (4N) on the same corpus and writes BENCH/BASELINE.md
-with both throughputs and efficiency = (T_4N/T_N)/4.
+maximal crawl wave in fresh subprocesses pinned with taskset to N and
+4N CPUs of the host's affinity set (scaling_pair: N = a quarter of it,
+so 1 vs 4 on a 4-CPU host) on the same corpus and writes
+BENCH/BASELINE.md with both throughputs and efficiency = (T_4N/T_N)/4.
 """
 
 from __future__ import annotations
@@ -670,20 +672,37 @@ def residue_section(residue: dict, pair) -> str:
     return "".join(out)
 
 
+def host_cpus() -> list[int]:
+    """The CPU ids this process may run on, ascending."""
+    return sorted(os.sched_getaffinity(0))
+
+
+def scaling_pair(cpus: list[int]) -> tuple[tuple[int, str], tuple[int, str]]:
+    """((N, cpuset), (4N, cpuset)) for the --scaling legs from the
+    host's CPU ids: N is a quarter of them, the N leg pins the first N
+    ids and the 4N leg the first 4N. Fewer than 4 CPUs cannot host the
+    pair (ValueError)."""
+    ids = sorted(cpus)
+    n = len(ids) // 4
+    if n < 1:
+        raise ValueError(f"--scaling needs at least 4 CPUs, this host allows {len(ids)}")
+    return (n, ",".join(map(str, ids[:n]))), (4 * n, ",".join(map(str, ids[: 4 * n])))
+
+
 def scaling_report(sf_dir: str, scale: int) -> None:
-    """One maximal crawl wave at 8 pinned CPUs (N) vs 32 (4N), fresh JVM
-    each. Big single wave + 4x corpus because scaling efficiency is only
-    meaningful when the data plane dominates per-wave fixed costs — the
-    regime a 100 TB crawl runs in.
+    """One maximal crawl wave at N pinned CPUs vs 4N (scaling_pair),
+    fresh JVM each. Big single wave + 4x corpus because scaling
+    efficiency is only meaningful when the data plane dominates per-wave
+    fixed costs — the regime a 100 TB crawl runs in.
     """
     scale = int(os.environ.get("NEWSCRAWL_SCALING_SCALE", scale * 4))
     # "Two cluster sizes" is emulated as two CPU allocations, enforced
-    # with taskset: the N leg is pinned to 8 physical CPUs, the 4N leg
-    # gets all 32. Pinning matters because a local[N] JVM with
-    # Python-UDF stages uses far more than N cores (N task threads + N
+    # with taskset: the N leg is pinned to a quarter of the host's CPUs,
+    # the 4N leg to four times that. Pinning matters because a local[N]
+    # JVM with Python-UDF stages uses far more than N cores (N task threads + N
     # Python workers + GC/IO threads), so unpinned local[N] vs local[4N]
     # does not compare 1:4 resources.
-    pair = ((8, "0-7"), (32, "0-31"))
+    pair = scaling_pair(host_cpus())
     results = {}
     residue = {}
     for cpus, cpuset in pair:
@@ -695,7 +714,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
         env["NEWSCRAWL_TIMING"] = "1"  # per-phase + per-write residue evidence
         # best-of-2 per leg: the shared virtual disk injects multi-x
         # interference into single runs (measured 10.1k vs 19.1k urls/s
-        # back-to-back on an identical 32-CPU extract stage)
+        # back-to-back on an identical extract stage on a 32-CPU host)
         env.setdefault("NEWSCRAWL_BENCH_REPS", "2")
         # heavier, more realistic page weight for the scaling pair
         # (~6 KB html vs the default ~3 KB; real news pages are
@@ -736,7 +755,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
             "same crawl job (identical corpus, identical waves) at two\n"
             "parallelism levels with fresh JVMs (no real cluster available).\n"
             "The two sizes are enforced as CPU allocations with taskset —\n"
-            "8 CPUs (N) vs 32 CPUs (4N) — because an unpinned local[N] JVM\n"
+            f"{lo} CPUs (N) vs {hi} CPUs (4N) — because an unpinned local[N] JVM\n"
             "with Python-UDF stages uses far more than N cores. Each leg is\n"
             "best-of-2 (the shared virtual disk injects multi-x interference\n"
             "into single runs).\n\n"
@@ -754,7 +773,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
             "(fetch + extract + classify + every state table committed —\n"
             "includes the per-wave serial residue: snapshot commits and\n"
             "parquet state writes against ONE shared virtual disk whose\n"
-            "bandwidth is identical at 8 and 32 CPUs, plus constant driver\n"
+            f"bandwidth is identical at {lo} and {hi} CPUs, plus constant driver\n"
             "orchestration seconds per wave.)\n\n"
             "| parallelism | pages | urls | wall sec | urls/sec |\n"
             "|---|---|---|---|---|\n"
@@ -798,7 +817,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(host_cpus())))
     scale = int(os.environ.get("NEWSCRAWL_BENCH_SCALE", "1"))
     if "--scaling" in sys.argv:
         scaling_report(sf_dir, scale)

@@ -10,7 +10,11 @@ accreting LSH index — this module implements it over the wave catalog:
   permutations — the four 32-bit hex slices of two md5 evaluations per
   word-3-gram shingle — banded 4x2; identical parameters and hash
   construction to the batch operators, so the two agree) to the
-  ``minhash_bands`` table, committed atomically with the wave;
+  ``minhash_bands`` table, committed atomically with the wave.  One
+  per-batch kernel (batch_bands) computes the keys: a gated crawl wave
+  runs it inside the extract pass (extract.make_extract_kernel(
+  bands=True) emits a ``bands`` array column, posexploded off the
+  wave's extract cache), and band_rows runs it over any text frame;
 - the next wave probes the table with a broadcast semi-filter FIRST and
   aggregates SECOND: the historical index — the 10^10-row side at web
   scale — streams map-side through a BroadcastHashJoin against the
@@ -54,67 +58,88 @@ BAND_SQL_TEMPLATE = """
 """
 
 
-def band_rows(df: DataFrame, id_col: str = "url", text_col: str = "text") -> DataFrame:
-    """(id, band, key) LSH band keys, one Arrow kernel riding the scan —
-    the same signature construction as queries._minhash_signatures (min
-    over word-3-gram shingles of md5(f'{i}|{shingle}') hex), emitted
-    directly as the 4 banded key rows. Documents with <3 tokens emit no
-    rows (no shingles -> never near-dup by this gate).
+# bound on the exploded (doc, shingle) frame handed to one DuckDB query
+_BAND_CHUNK_ROWS = 500_000
 
-    The md5 evaluation is vectorized through an in-worker DuckDB
-    connection (single-threaded — Spark already owns one core per
-    worker): the spec costs 2 md5 calls per shingle (~2000/doc at 6 KB
-    pages; each md5 yields four 32-bit hex-slice permutations), and
-    hashlib-in-a-loop plus md5-per-permutation made the gate ~6 ms/doc;
-    DuckDB's C md5 over an exploded (doc, shingle) frame with slice
-    derivation is ~0.5 ms/doc, byte-identical output.
-    tests/test_dedupgate.py::test_band_spec_matches_batch_minhash diffs
-    this kernel against the pure-Python batch kernel, so the two
-    implementations cross-validate."""
+
+def band_connection():
+    """The in-worker DuckDB connection the band kernel runs on —
+    single-threaded, because Spark already owns one core per worker."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("SET threads=1")
+    return con
+
+
+def batch_bands(con, ids, texts, id_col: str = "rid"):
+    """The band kernel over ONE Arrow batch: yields pandas frames of
+    (id_col, band, key) rows, the 4 band keys of every document with >= 3
+    tokens (fewer tokens -> no shingles -> no rows).
+
+    The spec is queries._minhash_signatures: word-3-gram shingles of
+    ``re.split(r"\\s+", text.lower())``, min over shingles of
+    md5(f'{i}|{shingle}') hex slices, banded 4x2.  The md5 evaluation
+    runs in DuckDB over the exploded (doc, shingle) frame
+    (BAND_SQL_TEMPLATE): 2 md5 calls per shingle, each yielding four
+    32-bit hex-slice permutations — ~0.5 ms/doc where hashlib in a loop
+    was ~6 ms/doc, byte-identical output.  band_rows and the gated
+    extract kernel (extract.make_extract_kernel(bands=True)) both call
+    this function, so the gate has one band implementation."""
     import re
 
     import pandas as pd
 
     sql = BAND_SQL_TEMPLATE.format(n_md5=N_MINHASH // 4, id_col=id_col)
 
-    def kernel(batch_iter, sql=sql):
-        import duckdb
+    def run_chunk(rids, shs):
+        sh = pd.DataFrame({"rid": rids, "s": shs})  # noqa: F841
+        return con.execute(sql).fetchdf()
 
-        con = duckdb.connect()
-        con.execute("SET threads=1")
-        empty = pd.DataFrame(
-            {id_col: pd.Series(dtype=object),
-             "band": pd.Series(dtype="int32"),
-             "key": pd.Series(dtype=object)}
-        )
+    rids: list = []
+    shs: list[str] = []
+    for rid, text in zip(ids, texts):
+        toks = re.split(r"\s+", (text or "").lower())
+        if len(toks) < 3:
+            continue
+        shingles = set(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2))
+        rids.extend([rid] * len(shingles))
+        shs.extend(shingles)
+        if len(rids) >= _BAND_CHUNK_ROWS:
+            yield run_chunk(rids, shs)
+            rids, shs = [], []
+    if rids:
+        yield run_chunk(rids, shs)
 
-        def run_chunk(rids, shs):
-            sh = pd.DataFrame({"rid": rids, "s": shs})  # noqa: F841
-            return con.execute(sql).fetchdf()
 
+def band_rows(df: DataFrame, id_col: str = "url", text_col: str = "text") -> DataFrame:
+    """(id, band, key) LSH band keys of a text frame, one Arrow kernel
+    riding the scan (batch_bands per batch).  Documents with <3 tokens
+    emit no rows (no shingles -> never near-dup by this gate).
+
+    The crawl's gated waves do not call this: their extract kernel emits
+    the same keys as a ``bands`` column in the extract pass itself, and
+    run_wave posexplodes them.  band_rows serves text-only callers
+    (wave_flags without ``bands``, the benchmark's layer replay, tests).
+    tests/test_dedupgate.py::test_band_spec_matches_batch_minhash diffs
+    it against the pure-Python batch kernel, and
+    ::test_extract_bands_match_band_rows diffs the extract column
+    against it."""
+    import pandas as pd
+
+    def kernel(batch_iter):
+        con = band_connection()
+        got_any = False
         for pdf in batch_iter:
-            rids: list[str] = []
-            shs: list[str] = []
-            got_any = False
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                toks = re.split(r"\s+", (text or "").lower())
-                if len(toks) < 3:
-                    continue
-                shingles = set(
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                )
-                rids.extend([rid] * len(shingles))
-                shs.extend(shingles)
-                # bound the exploded frame handed to one DuckDB query
-                if len(rids) >= 500_000:
-                    yield run_chunk(rids, shs)
-                    got_any = True
-                    rids, shs = [], []
-            if rids:
-                yield run_chunk(rids, shs)
+            for out in batch_bands(con, pdf[id_col], pdf[text_col], id_col):
                 got_any = True
-            if not got_any:
-                yield empty
+                yield out
+        if not got_any:
+            yield pd.DataFrame(
+                {id_col: pd.Series(dtype=object),
+                 "band": pd.Series(dtype="int32"),
+                 "key": pd.Series(dtype=object)}
+            )
 
     return df.select(id_col, text_col).mapInPandas(
         kernel, schema=f"{id_col} string, band int, key string"
@@ -186,13 +211,23 @@ def wave_flags(
     probe: str = "broadcast",
     bands_table: str | None = None,
     n_buckets: int = 64,
+    bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Gate one wave's articles against the persistent index and against
-    each other.  ``new_articles`` needs (url, text, sort_col).
+    each other.  The wave's band keys come from one of two places:
+    - ``new_articles`` (url, text, sort_col): band_rows computes them
+      here and the frame is persisted (the text-only path);
+    - ``bands`` (url, band, key, sort_col): precomputed rows, e.g. the
+      gated extract kernel's ``bands`` column posexploded off the
+      wave's extract cache (run_wave).  ``new_articles`` is then unused
+      and may be None; the rows already carry their sort key, so the
+      same-wave arm needs no (url -> sort key) join, and nothing is
+      persisted here.
 
-    Returns (flags, kept_bands, cached_bands) — cached_bands is the
-    persisted band frame both outputs derive from; the caller unpersists
-    it once the wave's writes committed.  Output frames:
+    Returns (flags, kept_bands, band_frame) — band_frame is the band
+    frame both outputs derive from (persisted on the text path); the
+    caller unpersists it, and flags, once the wave's writes committed.
+    Output frames:
     - flags(url, matched_url, n_band_hits, scope): articles that near-dup
       a prior-wave canonical (scope=prior_wave) or an earlier-sorted
       article of the SAME wave (scope=same_wave; first-wins by sort_col,
@@ -221,7 +256,14 @@ def wave_flags(
     distinct keys (one job over the already-persisted band frame) and
     picks; both paths are output-identical (hypothesis property +
     equivalence tests, tests/test_dedupgate.py)."""
-    bands_new = band_rows(new_articles).persist()
+    if bands is None:
+        bands_new = band_rows(new_articles).persist()
+        keyed = bands_new.join(
+            new_articles.select("url", F.col(sort_col).alias("_sk")), "url"
+        )
+    else:
+        bands_new = bands.select("url", "band", "key")
+        keyed = bands.select("url", "band", "key", F.col(sort_col).alias("_sk"))
 
     # Fanout bound (the same k^2 hazard as the PageRank chunk self-join,
     # fixed structurally instead of by a cap): both probe arms
@@ -315,8 +357,6 @@ def wave_flags(
     # arm).  Per (band, key) only the MINIMAL (sort, url) representative
     # is joined back: b shares a key with an earlier article iff the
     # key's earliest holder sorts before b.
-    order = new_articles.select("url", F.col(sort_col).alias("_sk"))
-    keyed = bands_new.join(order, "url")
     key_min = keyed.groupBy("band", "key").agg(
         F.min(F.struct(F.col("_sk").alias("_ask"), F.col("url").alias("_aurl"))).alias("_m")
     ).select("band", "key", F.col("_m._ask").alias("_ask"), F.col("_m._aurl").alias("_aurl"))
@@ -355,11 +395,11 @@ def wave_flags(
         "matched_url",
     )
     # flags is persisted because BOTH gate outputs traverse it (the
-    # flag-table write directly, the band append via the anti-join) —
-    # two concurrent writes racing an unfilled cache would each re-run
-    # the probe joins and the first-wins window. Bounded: one row per
-    # flagged article of ONE wave. The caller unpersists it with
-    # cached_bands after the wave's writes commit.
+    # flag-table write directly, the band append via the anti-join), so
+    # the probe joins and the first-wins window run once when the two
+    # writes run in that order (run_wave: one pool task). Bounded: one
+    # row per flagged article of ONE wave. The caller unpersists it
+    # after the wave's writes commit.
     flags = (
         both.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -525,7 +525,11 @@ EXTRACT_COLUMNS = (
 )
 
 
-def make_extract_kernel(enrich_fn=None):
+# Extra output column of the gated kernel (make_extract_kernel(bands=True)).
+BANDS_COLUMN = "bands array<string>"
+
+
+def make_extract_kernel(enrich_fn=None, bands: bool = False):
     """Build the extraction mapInPandas kernel with a pluggable
     classify stage. ``enrich_fn(text) -> (summary, topic,
     sentiment_label, sentiment_score, locations, organizations,
@@ -534,6 +538,13 @@ def make_extract_kernel(enrich_fn=None):
     etc. — classifier.py's three models). The function is captured in
     the kernel CLOSURE, so Spark serializes it with the task and it
     reaches executor Python workers — a module-level hook would not.
+
+    ``bands=True`` (the near-dup gate's kernel) appends BANDS_COLUMN:
+    the MinHash band keys of each non-skip page's text, array position =
+    band index, computed by dedupgate.batch_bands over the same batch —
+    so a gated wave reads every page's text once instead of once here
+    and again in dedupgate.band_rows. Null for skip pages and for texts
+    with fewer than 3 tokens (no shingles, so no bands).
     """
     enrich = enrich_fn or enrich_article
 
@@ -550,6 +561,12 @@ def make_extract_kernel(enrich_fn=None):
         from ._fp_native import get_fingerprint_fn
 
         fp = get_fingerprint_fn(rolling_fingerprint)
+        if bands:
+            import pandas as pd
+
+            from .dedupgate import N_BANDS, band_connection, batch_bands
+
+            con = band_connection()
         for pdf in batch_iter:
             htmls = pdf["html"]
             pdf = pdf.drop(columns=["html"])
@@ -583,6 +600,17 @@ def make_extract_kernel(enrich_fn=None):
             pdf["locations"] = [e[4] for e in enr]
             pdf["organizations"] = [e[5] for e in enr]
             pdf["persons"] = [e[6] for e in enr]
+            if bands:
+                keep = [i for i, sk in enumerate(pdf["skip"]) if not sk]
+                per_row: list = [None] * len(texts)
+                for out in batch_bands(con, keep, [texts[i] for i in keep]):
+                    for i, b, k in zip(
+                        out["rid"].tolist(), out["band"].tolist(), out["key"]
+                    ):
+                        if per_row[i] is None:
+                            per_row[i] = [None] * N_BANDS
+                        per_row[i][b] = k
+                pdf["bands"] = pd.Series(per_row, index=pdf.index, dtype=object)
             yield pdf
 
     return extract_pages_fn

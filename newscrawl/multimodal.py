@@ -114,6 +114,8 @@ def decode_png(payload: bytes) -> "numpy.ndarray":  # noqa: F821
         if plte is None:
             raise ValueError("palette PNG without PLTE")
         palette = np.frombuffer(plte, np.uint8).reshape(-1, 3)
+        if px.size and int(px.max()) >= len(palette):
+            raise ValueError("PNG palette index beyond PLTE")
         px = palette[px[:, :, 0]]
     return px
 
@@ -252,6 +254,15 @@ def decode_audio(payload: bytes) -> tuple:
     )
 
 
+# What decode_image / decode_audio raise on malformed bytes: ValueError
+# and NotImplementedError are declared (a palette index beyond a short
+# PLTE is checked and raised as ValueError); a truncated IDAT raises
+# zlib.error, a short chunk struct.error, a cut compressed stream
+# EOFError — none of which subclasses ValueError.
+# tests/test_functions_multimodal.py fuzzes the decoders against this.
+DECODE_ERRORS = (ValueError, NotImplementedError, struct.error, zlib.error, EOFError)
+
+
 def _fallback_features(payload: bytes | None) -> tuple:
     if payload is None:
         return 0, "", 0, 0, 0, False, 0, 0
@@ -269,9 +280,10 @@ def extract_media_features(batch_iter: Iterator["pandas.DataFrame"]) -> Iterator
     """mapInPandas kernel: payload binary -> typed feature columns.
 
     Tries the real decoder per media_type (PNG and WAV decode for
-    real; other formats raise); on NotImplementedError/ValueError falls
-    back to the deterministic feature extractor. Payload is dropped on
-    output (same never-move-raw-bytes rule as html extraction).
+    real; other formats raise); on a decode failure (DECODE_ERRORS)
+    falls back to the deterministic feature extractor. Payload is
+    dropped on output (same never-move-raw-bytes rule as html
+    extraction).
     """
     for pdf in batch_iter:
         feats = []
@@ -310,12 +322,10 @@ def extract_media_features(batch_iter: Iterator["pandas.DataFrame"]) -> Iterator
                     )
                     continue
                 feats.append(_fallback_features(payload))
-            except Exception:
-                # the FULL decode failure surface, not just the declared
-                # stubs: a truncated IDAT raises zlib.error, a short fmt
-                # chunk raises struct.error, and neither subclasses
-                # ValueError — malformed crawled bytes must degrade to
-                # the fallback features, never kill the wave (ADVICE r6)
+            except DECODE_ERRORS:
+                # malformed crawled bytes degrade to the fallback
+                # features, never kill the wave; any other exception is
+                # a bug in the decoder and propagates
                 feats.append(_fallback_features(payload))
         out = pdf.drop(columns=["payload"]).reset_index(drop=True)
         out[

@@ -14,12 +14,19 @@ get_all_articles.py:6-19 + classifier.py:194-320):
          co-located zero-Exchange variant, bucketing.py)
       -> mapInPandas extract, html dropped in-scan (S14, P8, F4 +
          per-page text analysis + the classify stage: topic/sentiment/
-         summary/entities, reference classifier.py:232-277)
+         summary/entities, reference classifier.py:232-277; with the
+         near-dup gate on, also each page's MinHash band keys)
+      -> persisted once: candidates, unseen (the budget gate's input,
+         shared by kept and deferred), kept, extract output
       -> split: articles Δ | seen Δ | carry (fetch-fail or <100 chars,
                retried next wave) | child frontier rows
+      -> near-dup gate (dedupgate.py): band rows posexploded off the
+         extract cache, probed against the band index and first-wins
+         within the wave; flags persisted for their two writes
       -> atomic multi-table commit, output jobs submitted concurrently
          (frontier overwrite, seen/articles/metrics append, bloom
-         shards overwrite; delta writes coalesced, zstd)
+         shards overwrite, one task writing near_dup_flags then
+         minhash_bands; delta writes coalesced, zstd)
 
 Crash anywhere before commit leaves state untouched; re-running the wave
 is idempotent (the driver loop resumes from the snapshot's wave index).
@@ -277,6 +284,11 @@ def run_wave(
     tick("bloom_load")
     unseen = seenset.antijoin_unseen(cands, seen, bloom, spill)
     unseen = politeness.robots_filter(unseen, robots)
+    if budget is not None:
+        # kept (the fetch side) and deferred (the frontier write's carry)
+        # both derive from the budget gate's input: cache it once, or the
+        # frontier write re-runs the bloom kernel and the exact anti-join
+        unseen = unseen.persist()
 
     kept, deferred = politeness.budget_gate(unseen, budget)
     kept = kept.persist()
@@ -321,10 +333,16 @@ def run_wave(
         for f in fetched.schema.fields
         if f.name != "html"
     )
-    kernel = (
-        ex.extract_pages if enrich_fn is None else ex.make_extract_kernel(enrich_fn)
-    )
-    ext_raw = fetched.mapInPandas(kernel, schema=f"{in_ddl}, {ex.EXTRACT_COLUMNS}")
+    out_ddl = f"{in_ddl}, {ex.EXTRACT_COLUMNS}"
+    if dedup_gate:
+        # the near-dup gate's band keys come out of this same pass
+        kernel = ex.make_extract_kernel(enrich_fn, bands=True)
+        out_ddl += f", {ex.BANDS_COLUMN}"
+    elif enrich_fn is not None:
+        kernel = ex.make_extract_kernel(enrich_fn)
+    else:
+        kernel = ex.extract_pages
+    ext_raw = fetched.mapInPandas(kernel, schema=out_ddl)
     # re-key with the SAME scheduler that ordered the candidates (the
     # broadcast carries only the six frontier columns; the key is a
     # deterministic projection, so recomputation equals selection)
@@ -411,24 +429,24 @@ def run_wave(
                 if catalog.table_stats("minhash_bands")
                 else None
             )
-            nd_flags, nd_kept_bands, _nd_cached = dedupgate.wave_flags(
-                classified.select(
-                    "url", "text", F.col(priority.SORT_KEY).alias("sort_key")
-                ),
+            # band rows straight off the extract cache: the kernel
+            # emitted each page's keys in-pass, and each row carries
+            # its crawl sort key for the same-wave first-wins arm
+            nd_flags, nd_kept_bands, _ = dedupgate.wave_flags(
+                None,
                 prior_bands,
+                bands=classified.select(
+                    "url",
+                    F.col(priority.SORT_KEY).alias("sort_key"),
+                    F.posexplode("bands").alias("band", "key"),
+                ),
             )
-            # keep the handle wave_flags persisted: rebinding nd_flags
-            # below derives a NEW frame, and unpersisting the derived
-            # frame would be a no-op on the parent's cached relation
-            # (one leaked persisted DataFrame per gated wave)
-            _nd_flags_cached = nd_flags
-            nd_flags = nd_flags.withColumn("wave_id", F.lit(wid))
             if dedup_gate == "drop":
                 articles = articles.join(
                     nd_flags.select("url"), "url", "left_anti"
                 )
         else:
-            nd_flags = nd_kept_bands = _nd_cached = _nd_flags_cached = None
+            nd_flags = nd_kept_bands = None
 
         # quality sink gate (audit-trailed): below-threshold articles go
         # to quality_flags instead of the articles table
@@ -461,19 +479,16 @@ def run_wave(
         new_frontier = carry.unionByName(children)
 
         # In DROP mode the articles sink depends on the flag decisions,
-        # so the gate must materialize (extract cache -> bands -> flags)
-        # BEFORE any write: two concurrent jobs racing an unfilled cache
-        # would each recompute the (md5-heavy) band kernel and the probe
-        # joins. In FLAG mode (and ungated) the articles frame does NOT
-        # depend on the flags, so the fused write below both fills the
-        # extract cache AND overlaps sink IO with extract CPU; the
-        # band/flag frames then materialize off the filled cache.
-        _gate_pre_fuse = _nd_cached is not None and dedup_gate == "drop"
-        if _gate_pre_fuse:
+        # so the flags must materialize (extract cache -> flags) BEFORE
+        # any write: two concurrent jobs racing an unfilled cache would
+        # each recompute the probe joins. In FLAG mode (and ungated) the
+        # articles frame does NOT depend on the flags, so the fused
+        # write below both fills the extract cache AND overlaps sink IO
+        # with extract CPU; the gate's writes then run in the write
+        # pool off the filled cache.
+        if dedup_gate == "drop":
             n_extracted = extracted.count()
             tick("extract(materialize)")
-            _nd_cached.count()
-            tick("dedup_gate(bands materialize)")
             nd_flags.count()
             tick("dedup_gate(flags materialize)")
         else:
@@ -686,15 +701,6 @@ def run_wave(
                 _w_art = _w_plan
             timed_write("articles", articles.coalesce(_w_art), "append")
             tick("extract+articles(fused)")
-            if _nd_cached is not None:
-                # flag-mode gate: bands + flag decisions materialize
-                # ONCE off the now-filled extract cache, before the
-                # write pool races them (drop mode took the pre-fuse
-                # path above instead)
-                _nd_cached.count()
-                tick("dedup_gate(bands materialize)")
-                nd_flags.count()
-                tick("dedup_gate(flags materialize)")
             n_extracted = extracted.count()  # cache is filled: cheap
 
         with ThreadPoolExecutor(max_workers=8) as pool:
@@ -803,40 +809,34 @@ def run_wave(
                 if media_sink
                 else None
             )
-            f_nd_flags = (
-                pool.submit(
-                    timed_write,
+
+            def gate_writes() -> None:
+                # ONE task, in order: the flags write fills the flags
+                # cache, and the band append's anti-join then reads it
+                # (two concurrent writes would each compute the probe)
+                timed_write(
                     "near_dup_flags",
-                    narrowed(nd_flags, 2),
+                    narrowed(nd_flags.withColumn("wave_id", F.lit(wid)), 2),
                     "append",
                 )
-                if nd_flags is not None
-                else None
-            )
+                timed_write(
+                    "minhash_bands",
+                    write_narrowed(
+                        "minhash_bands",
+                        nd_kept_bands.select("url", "band", "key").withColumn(
+                            "wave_id", F.lit(wid)
+                        ),
+                        n_extracted * dedupgate.N_BANDS,
+                    ),
+                    "append",
+                )
+
+            f_gate = pool.submit(gate_writes) if dedup_gate else None
             f_q_flags = (
                 pool.submit(
                     timed_write, "quality_flags", narrowed(q_flags, 2), "append"
                 )
                 if q_flags is not None
-                else None
-            )
-            f_nd_bands = (
-                pool.submit(
-                    timed_write,
-                    "minhash_bands",
-                    nd_kept_bands.select("url", "band", "key")
-                    .withColumn("wave_id", F.lit(wid))
-                    .transform(
-                        lambda d: write_narrowed(
-                            "minhash_bands",
-                            d,
-                            n_extracted
-                            * (dedupgate.N_BANDS if dedup_gate else 1),
-                        )
-                    ),
-                    "append",
-                )
-                if nd_kept_bands is not None
                 else None
             )
             # deletable tier: ONE job builds both accelerator artifacts
@@ -865,16 +865,13 @@ def run_wave(
                 f_hosts.result()
             if f_media is not None:
                 f_media.result()
-            if f_nd_flags is not None:
-                f_nd_flags.result()
-            if f_nd_bands is not None:
-                f_nd_bands.result()
+            if f_gate is not None:
+                f_gate.result()
             if f_q_flags is not None:
                 f_q_flags.result()
             accel_rows = f_accel.result() if f_accel is not None else None
-        if _nd_cached is not None:
-            _nd_cached.unpersist()
-            _nd_flags_cached.unpersist()
+        if dedup_gate:
+            nd_flags.unpersist()
         tick("parallel writes+stats")
 
         n_yielded = sum(r.n for r in stat_rows)
@@ -972,6 +969,7 @@ def run_wave(
     finally:
         extracted.unpersist()
         kept.unpersist()
+        unseen.unpersist()
         cands.unpersist()
         if cand_table is not None:
             spark.sql(f"DROP TABLE IF EXISTS {cand_table}")

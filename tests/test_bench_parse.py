@@ -6,7 +6,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from bench import parse_wave_timing
+from bench import parse_wave_timing, scaling_pair
 
 WARMUP = """[w0000] dedup+count: 9.05s
 [w0000] extract(materialize): 2.62s
@@ -138,3 +138,17 @@ def test_last_run_roundtrip(tmp_path, monkeypatch):
     name, data = bench.load_prev_bench()
     assert name == "BENCH/last_run.json"
     assert data["crawl"]["sec"] == 2.0
+
+
+def test_scaling_pair_follows_the_host():
+    """--scaling's N/4N legs come from the affinity set: N is a quarter
+    of the CPUs, each leg pins the lowest ids as a taskset -c list."""
+    import pytest
+
+    assert scaling_pair([0, 1, 2, 3]) == ((1, "0"), (4, "0,1,2,3"))
+    n, cpuset = scaling_pair(list(range(32)))[0]
+    assert (n, cpuset) == (8, "0,1,2,3,4,5,6,7")
+    # unordered and non-contiguous sets; a remainder CPU stays unused
+    assert scaling_pair([9, 2, 5, 3, 7]) == ((1, "2"), (4, "2,3,5,7"))
+    with pytest.raises(ValueError):
+        scaling_pair([0, 1, 2])

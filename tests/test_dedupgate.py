@@ -380,3 +380,64 @@ def test_auto_probe_picks_broadcast_below_bound(spark, wave_urls, monkeypatch):
     f_big, _k2, c2 = dedupgate.wave_flags(arts, prior, probe="auto")
     assert _flags_set(f_big) == want
     c2.unpersist(); f_big.unpersist()
+
+
+def test_extract_bands_match_band_rows(spark):
+    """One band implementation: the gated extract kernel's in-pass
+    ``bands`` column, posexploded, equals dedupgate.band_rows over the
+    same pages' extracted text row for row — through empty and None
+    pages, texts under 3 tokens, whitespace-only and leading-whitespace
+    bodies, non-ASCII case folding and a skip-titled page (whose bands
+    are null: it never becomes an article)."""
+    from newscrawl import dedupgate
+    from newscrawl import extract as ex
+
+    long = " ".join(f"w{i % 37} t{i % 11}" for i in range(400))
+    bodies = {
+        "none": None,
+        "no-article": b"<html><p>alpha beta gamma delta</p></html>",
+        "empty": b"<article></article>",
+        "blank": b"<article>  \n\t </article>",
+        "blank-title": b"<article><h1>   </h1></article>",
+        "two-tokens": b"<article><p>two words</p></article>",
+        "three-tokens": b"<article><p>exactly three tokens</p></article>",
+        "leading-ws": b"<article><h1> </h1><p>  alpha beta gamma delta</p></article>",
+        "long-s": "<article><p>ſtrong ſignal Strong Signal ſtrong</p></article>".encode(),
+        "dotted-i": "<article><p>İstanbul İzmir istanbul izmir İSTANBUL</p></article>".encode(),
+        "cjk": "<article><p>東京 大阪 京都 名古屋 札幌</p><p>東京大阪京都</p></article>".encode(),
+        "long": f"<article><h1>A title</h1><p>{long}</p></article>".encode(),
+        "long-copy": f"<article><h1>A title</h1><p>{long}</p></article>".encode(),
+        "skip": f"<article><h1>Sign up for our newsletter</h1><p>{long}</p></article>".encode(),
+    }
+    pages = spark.createDataFrame(
+        [(u, None if h is None else bytearray(h)) for u, h in bodies.items()],
+        "url string, html binary",
+    ).repartition(3)
+    out = pages.mapInPandas(
+        ex.make_extract_kernel(bands=True),
+        schema=f"url string, {ex.EXTRACT_COLUMNS}, {ex.BANDS_COLUMN}",
+    ).persist()
+    try:
+        got = sorted(
+            (r.url, r.band, r.key)
+            for r in out.select(
+                "url", F.posexplode("bands").alias("band", "key")
+            ).collect()
+        )
+        want = sorted(
+            (r.url, r.band, r.key)
+            for r in dedupgate.band_rows(
+                out.filter(~F.col("skip")).select("url", "text")
+            ).collect()
+        )
+        assert got == want
+        by_url = {r.url: r for r in out.select("url", "skip", "bands").collect()}
+        assert by_url["skip"].skip and by_url["skip"].bands is None
+        for u in ("none", "no-article", "empty", "blank", "blank-title", "two-tokens"):
+            assert by_url[u].bands is None, u
+        for u in ("three-tokens", "leading-ws", "long-s", "dotted-i", "cjk", "long"):
+            assert len(by_url[u].bands) == dedupgate.N_BANDS, u
+            assert all(by_url[u].bands), u
+        assert by_url["long"].bands == by_url["long-copy"].bands
+    finally:
+        out.unpersist()

@@ -314,3 +314,113 @@ def test_media_features_real_wav_and_resize_noop(spark):
     assert not wav_row.needs_resize
     fb = out[2]
     assert fb.channels == 0 and (fb.sample_rate, fb.n_samples) == (0, 0)
+
+
+_FEATURES = [
+    "n_bytes", "sha256_16", "width", "height", "channels", "decode_ok",
+    "sample_rate", "n_samples",
+]
+
+
+def _palette_png(idx, palette: bytes) -> bytes:
+    """Color-type-3 PNG: encode_png's gray rows with IHDR's color type
+    set to 3 and a PLTE chunk (raw RGB triples) before the IDAT."""
+    import struct
+    import zlib
+
+    def chunk(typ: bytes, body: bytes) -> bytes:
+        crc = struct.pack(">I", zlib.crc32(typ + body))
+        return struct.pack(">I", len(body)) + typ + body + crc
+
+    gray = mm.encode_png(idx)
+    ihdr_end = 8 + 8 + 13 + 4  # magic, IHDR length+type, body, crc
+    w, h = struct.unpack(">II", gray[16:24])
+    ihdr = chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0))
+    return gray[:8] + ihdr + chunk(b"PLTE", palette) + gray[ihdr_end:]
+
+
+def test_corrupt_media_degrades_to_fallback():
+    """Seeded fuzz of the feature kernel: every truncation and random
+    byte flip of a real PNG (RGB and palette) and a real WAV payload
+    yields a row — the real decode when the decoder still accepts the
+    bytes, else exactly the fallback features — and the decoders fail
+    only with the classes the kernel catches (DECODE_ERRORS)."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    rng = random.Random(20261017)
+    img = (np.arange(9 * 7 * 3).reshape(9, 7, 3) % 251).astype(np.uint8)
+    idx = (np.arange(6 * 5).reshape(6, 5) % 4).astype(np.uint8)
+    palette = bytes(range(12))  # 4 RGB entries
+    pal_png = _palette_png(idx, palette)
+    assert mm.decode_image(pal_png).tolist() == np.frombuffer(
+        palette, np.uint8
+    ).reshape(4, 3)[idx].tolist()
+    # a PLTE shorter than the largest pixel index is malformed bytes,
+    # not a decoder bug: it must fall back like any other corruption
+    short_plte = _palette_png(idx, palette[:9])
+    with pytest.raises(ValueError):
+        mm.decode_image(short_plte)
+    sig = np.sin(np.linspace(0, 20, 150)).astype(np.float32)
+    cases = (
+        ("image", mm.encode_png(img), mm.decode_image),
+        ("image", pal_png, mm.decode_image),
+        ("audio", mm.encode_wav(sig, 8000), mm.decode_audio),
+    )
+    for mtype, good, decode in cases:
+        muts = [good[:i] for i in range(len(good))]
+        if good is pal_png:
+            muts.append(short_plte)
+        for _ in range(300):
+            b = bytearray(good)
+            for _k in range(rng.randint(1, 3)):
+                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
+            muts.append(bytes(b))
+        pdf = pd.DataFrame(
+            {"media_id": range(len(muts)), "payload": muts,
+             "media_type": [mtype] * len(muts)}
+        )
+        (out,) = mm.extract_media_features(iter([pdf]))
+        n_fallback = 0
+        for m, row in zip(muts, out[_FEATURES].itertuples(index=False)):
+            try:
+                decode(m)
+            except mm.DECODE_ERRORS:
+                assert tuple(row) == mm._fallback_features(m)
+                n_fallback += 1
+            else:
+                assert row.decode_ok and row.channels > 0
+        # every cut inside the 44-byte WAV header, and most PNG cuts
+        assert n_fallback >= 44, (mtype, n_fallback)
+
+
+def test_decoder_bug_propagates_out_of_page_media_features(spark, monkeypatch):
+    """Only decode failures degrade: a decoder that raises
+    AttributeError (a bug, not malformed bytes) must fail the job
+    instead of silently turning every image into fallback features."""
+    import numpy as np
+
+    def kernel(batch_iter):
+        # runs in the Python worker: patch the worker's decoder there
+        import newscrawl.multimodal as wm
+
+        def broken(payload):
+            raise AttributeError("decoder bug")
+
+        orig = wm.decode_image
+        wm.decode_image = broken
+        try:
+            yield from wm.extract_media_features(batch_iter)
+        finally:
+            wm.decode_image = orig
+
+    monkeypatch.setattr(mm, "extract_media_features", kernel)
+    fetched = spark.createDataFrame(
+        [("https://h.example.com/a.png",
+          bytearray(mm.encode_png(np.zeros((4, 4, 3), np.uint8))))],
+        "url string, html binary",
+    )
+    with pytest.raises(Exception, match="AttributeError"):
+        mm.page_media_features(fetched).collect()

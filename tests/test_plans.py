@@ -360,3 +360,33 @@ def test_logreg_scoring_is_single_aggregation(spark):
     assert "Join" not in plan
     hash_exchanges = re.findall(r"Exchange hashpartitioning", plan)
     assert len(hash_exchanges) == 1, hash_exchanges
+
+
+def test_gated_wave_bands_come_from_the_extract_pass(spark, tmp_path, monkeypatch):
+    """A flag-mode gated wave hands wave_flags band rows whose plan holds
+    exactly ONE MapInPandas — the extract kernel, inside the cached
+    extract relation: the band keys come out of the extract pass, not
+    from a second Arrow kernel over every article's text."""
+    from newscrawl import dedupgate, wave
+    from newscrawl.storage import ManifestParquetCatalog
+
+    real = dedupgate.wave_flags
+    plans = []
+
+    def spy(*args, **kwargs):
+        # planned while run_wave still holds the extract cache
+        plans.append(_plan(kwargs["bands"]))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedupgate, "wave_flags", spy)
+    cfg = synth.SynthConfig(n_seed=2, n_total=10, n_waves=1)
+    # a parquet page corpus, so the synthetic generator's own kernel is
+    # not part of the plan
+    synth.build_pages_df(spark, cfg).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    cat = ManifestParquetCatalog(str(tmp_path / "gated"))
+    wave.run_crawl(spark, cat, cfg, pages=pages, dedup_gate="flag")
+    assert len(plans) == 1
+    plan = plans[0]
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.index("InMemoryRelation") < plan.index("MapInPandas"), plan
