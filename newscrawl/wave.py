@@ -12,6 +12,8 @@ get_all_articles.py:6-19 + classifier.py:194-320):
       -> pages scan ⋈ broadcast(candidates)     (the "fetch"; J4 —
          html never shuffles; pages_table= switches to the bucketed
          co-located zero-Exchange variant, bucketing.py)
+      -> narrow coalesce to one partition per core (no Exchange: the
+         wave's extract cache and every job over it run at host width)
       -> mapInPandas extract, html dropped in-scan (S14, P8, F4 +
          per-page text analysis + the classify stage: topic/sentiment/
          summary/entities, reference classifier.py:232-277; with the
@@ -328,6 +330,12 @@ def run_wave(
         fetched = pages.select("url", "warc_ts", "html").join(
             F.broadcast(kept.select(*FRONTIER_COLS)), "url", "inner"
         )
+    # one extract partition per core, not one per pages-scan split: the
+    # wave's extract output is small, and the cache it fills feeds every
+    # later job of the wave (the fused articles write, frontier, seen,
+    # the gate writes, stats), each paying a fixed cost per task. A
+    # narrow coalesce plans no Exchange, so html still never moves.
+    fetched = fetched.coalesce(spark.sparkContext.defaultParallelism)
     in_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in fetched.schema.fields
@@ -561,10 +569,11 @@ def run_wave(
         commit = catalog.begin()
         from concurrent.futures import ThreadPoolExecutor
 
-        # coalesce delta writes: the extract stage runs wide (one partition
-        # per scan split), but writing one file per split piles up tiny
-        # files wave over wave and every later state read pays for it
-        # (the classic small-files problem). Narrow only the write side.
+        # coalesce delta writes: the extract stage runs one partition per
+        # core, but writing one file per core for a KB-scale delta piles
+        # up tiny files wave over wave and every later state read pays
+        # for it (the classic small-files problem). Narrow only the
+        # write side.
         # Width per table = estimated delta bytes / target file size, with
         # bytes/row taken from the catalog's manifest stats (all waves so
         # far) — so a 10x-bigger wave writes ~10x the files instead of a
@@ -596,8 +605,9 @@ def run_wave(
         # write went 6.9 s -> 40.8 s when it briefly took the
         # repartition path).
         _SMALL_DELTA_BYTES = 64 << 20
-        # fused articles write: above this estimated delta the carried
-        # extract stage must not collapse to one core (ADVICE r6)
+        # fused articles write: above this estimated delta it runs at
+        # full width, so the extract stage it carries keeps every core
+        # (ADVICE r6); below it, at the planned width
         _FUSED_FLOOR_BYTES = 256 << 10
 
         def write_plan(table: str, n_rows_est: int) -> tuple:
@@ -618,13 +628,15 @@ def run_wave(
             df: DataFrame, width: int, est_bytes: float | None = None
         ) -> DataFrame:
             # HOW to narrow matters as much as the width: coalesce(w)
-            # collapses the whole UPSTREAM computation to w tasks (a
-            # 1-file frontier write would derive carry+children on one
-            # core — the serialization measured at 1.2-1.6 s/wave),
-            # while repartition keeps the derivation wide and shuffles
-            # only the KB-to-MB delta into w write tasks. The shuffle is
-            # ONLY for provably small deltas: big frames always coalesce
-            # (no shuffle of big bytes — the articles write at scale).
+            # collapses the whole UPSTREAM computation (one partition
+            # per core off the extract cache) to w tasks (a 1-file
+            # frontier write would derive carry+children on one core —
+            # the serialization measured at 1.2-1.6 s/wave), while
+            # repartition keeps the derivation wide and shuffles only
+            # the KB-to-MB delta into w write tasks. The shuffle is ONLY
+            # for provably small deltas narrowed below half the cores:
+            # big frames always coalesce (no shuffle of big bytes — the
+            # articles write at scale).
             if (
                 est_bytes is not None
                 and est_bytes <= _SMALL_DELTA_BYTES
@@ -676,29 +688,17 @@ def run_wave(
             # the extract cache, so extract CPU and articles sink IO
             # run in ONE job — the 10+ s/wave the articles write spent
             # as serial residue now overlaps the extract stage. Width =
-            # every core (coalesce must not narrow the extract
-            # computation it carries; files stay >= 16 MB whenever the
-            # wave has >= 2 min-files of data, and compact() bin-packs
-            # later). Never repartition here — that would shuffle the
-            # whole data plane.
+            # every core (the extract runs one partition per core, and
+            # coalesce must not narrow the computation this write
+            # carries; compact() bin-packs the files later). Never
+            # repartition here — that would shuffle the whole data
+            # plane. GENUINELY tiny waves (KB deltas below
+            # _FUSED_FLOOR_BYTES — golden/test crawls) keep the planned
+            # width, one file at the default target, where multi-file
+            # task scheduling costs more than it saves (the r5
+            # inverse-scaling residue).
             _w_plan, _est_art = write_plan("articles", n_frontier)
-            # mid-size-wave floor (ADVICE r6): a sub-2-min-file estimate
-            # used to coalesce to _w_plan (often 1), collapsing the
-            # whole extract computation this write CARRIES onto one
-            # core — the upstream-serialization hazard the narrowed()
-            # comment warns about. Keep >= half the cores once the
-            # estimated delta implies enough pages that single-core
-            # extraction would dominate (above ~_FUSED_FLOOR_BYTES);
-            # compact() bin-packs the resulting small files. GENUINELY
-            # tiny waves (KB deltas — golden/test crawls) keep the
-            # 1-file clamp, where multi-file task scheduling costs more
-            # than it saves (the r5 inverse-scaling residue).
-            if _est_art >= 2 * _MIN_FILE_BYTES:
-                _w_art = _cores
-            elif _est_art >= _FUSED_FLOOR_BYTES:
-                _w_art = max(_w_plan, _cores // 2)
-            else:
-                _w_art = _w_plan
+            _w_art = _cores if _est_art >= _FUSED_FLOOR_BYTES else _w_plan
             timed_write("articles", articles.coalesce(_w_art), "append")
             tick("extract+articles(fused)")
             n_extracted = extracted.count()  # cache is filled: cheap

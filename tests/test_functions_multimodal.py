@@ -1,4 +1,4 @@
-"""Chunking / entity-list / HMAC functions and multimodal plumbing."""
+"""HMAC signing functions and multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -11,48 +11,11 @@ from newscrawl import functions as fn
 from newscrawl import multimodal as mm
 
 
-def test_chunk_paragraphs_packs_and_hard_splits():
-    text = "aaa\n\nbbb\n\n" + "c" * 50
-    chunks = fn.chunk_paragraphs(text, max_chars=10)
-    assert all(len(c) <= 10 for c in chunks)
-    assert "".join(chunks).count("c") == 50
-    # packing: small paras merge under the budget
-    merged = fn.chunk_paragraphs("aa\n\nbb", max_chars=100)
-    assert merged == ["aa\n\nbb"]
-    assert fn.chunk_paragraphs("") == []
-
-
-def test_chunk_sentences_token_budget():
-    text = "one two three. four five. six seven eight nine."
-    chunks = fn.chunk_sentences(text, max_tokens=5)
-    assert len(chunks) >= 2
-    assert all(len(c.split()) <= 9 for c in chunks)  # no chunk way over
-
-
-def test_dedupe_preserve_first_normalized():
-    names = ["Biden's", "biden", '"Biden"', "EU", "eu Council"]
-    assert fn.dedupe_preserve_first(names) == ["Biden's", "EU", "eu Council"]
-
-
-def test_drop_contained_names_order_preserved():
-    names = ["York", "New York City", "New York", "Paris"]
-    assert fn.drop_contained_names(names) == ["New York City", "Paris"]
-
-
 def test_hmac_matches_stdlib():
     key, payload = b"secret", b'{"a":1}'
     assert fn.hmac_sha256_hex(key, payload) == hmac_mod.new(
         key, payload, hashlib.sha256
     ).hexdigest()
-
-
-def test_with_chunks_spark(spark):
-    df = spark.createDataFrame(
-        [(1, "aaa\n\nbbbb"), (2, "x" * 30)], "id long, text string"
-    )
-    out = {r.id: r.chunks for r in fn.with_chunks(df, max_chars=5).collect()}
-    assert out[1] == ["aaa", "bbbb"]
-    assert out[2] == ["x" * 5] * 6
 
 
 def test_with_hmac_signature_spark(spark):

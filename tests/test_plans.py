@@ -188,11 +188,12 @@ def test_rollup_single_shuffle(spark):
     assert plan.count("FileScan parquet") == 1
 
 
-def _ancestors_to_first_join(plan: str, leaf_marker: str) -> list[str]:
+def _ancestors_until(plan: str, leaf_marker: str, stop: str) -> list[str]:
     """Node names on the path from the (unique) leaf matching
-    ``leaf_marker`` UP to (and excluding) the nearest ancestor join, in
-    the indented executedPlan tree.  A line is an ancestor iff its node
-    name starts at a strictly smaller column than the current node's."""
+    ``leaf_marker`` UP to (and excluding) the nearest ancestor whose name
+    contains ``stop``, in the indented executedPlan tree.  A line is an
+    ancestor iff its node name starts at a strictly smaller column than
+    the current node's."""
     lines = plan.splitlines()
 
     def depth(line: str) -> int:
@@ -210,7 +211,7 @@ def _ancestors_to_first_join(plan: str, leaf_marker: str) -> list[str]:
         if d < cur:
             cur = d
             name = lines[i].strip(" :+-*")
-            if "Join" in name:
+            if stop in name:
                 return out
             out.append(name)
     return out
@@ -241,7 +242,7 @@ def test_dedup_gate_probe_broadcasts_new_side(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
     # the ONLY FileScan in this plan is the prior index; its path to the
     # probe join must be shuffle- and aggregation-free
-    path = _ancestors_to_first_join(plan, "FileScan parquet")
+    path = _ancestors_until(plan, "FileScan parquet", "Join")
     assert not any(
         "Exchange" in n or "HashAggregate" in n for n in path
     ), f"prior side shuffles/aggregates before the probe join: {path}\n{plan}"
@@ -310,7 +311,7 @@ def test_dedup_gate_bucketed_probe_is_colocated(spark, tmp_path):
     )
     plan = _plan(flags)
     assert "SortMergeJoin" in plan
-    path = _ancestors_to_first_join(plan, "newscrawl_plan_band_index")
+    path = _ancestors_until(plan, "newscrawl_plan_band_index", "Join")
     assert not any(
         "Exchange" in n or "HashAggregate" in n for n in path
     ), f"history side shuffles before the co-located probe join: {path}\n{plan}"
@@ -390,3 +391,64 @@ def test_gated_wave_bands_come_from_the_extract_pass(spark, tmp_path, monkeypatc
     plan = plans[0]
     assert plan.count("MapInPandas") == 1, plan
     assert plan.index("InMemoryRelation") < plan.index("MapInPandas"), plan
+
+
+def test_gated_wave_extracts_at_host_width(spark, tmp_path, monkeypatch):
+    """A gated wave over a pages corpus split four times wider than the
+    host extracts at host width: the extract cache holds at most
+    defaultParallelism partitions, and no Exchange sits between the
+    pages scan and the extract MapInPandas — on the broadcast fetch path
+    and on the bucketed (pages_table=) path alike, so html never moves."""
+    from newscrawl import dedupgate, wave
+    from newscrawl.bucketing import write_bucketed
+    from newscrawl.storage import ManifestParquetCatalog
+
+    cores = spark.sparkContext.defaultParallelism
+    real = dedupgate.wave_flags
+    seen = []
+
+    def spy(*args, **kwargs):
+        # the band rows are a narrow projection of the extract cache:
+        # planned and sized while run_wave still holds it
+        bands = kwargs["bands"]
+        seen.append((_plan(bands), bands.rdd.getNumPartitions()))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedupgate, "wave_flags", spy)
+    cfg = synth.SynthConfig(n_seed=2, n_total=10, n_waves=1)
+    pages = synth.build_pages_df(spark, cfg, num_partitions=4 * cores)
+    pages.write.parquet(str(tmp_path / "pages"))
+    spark.sql("DROP TABLE IF EXISTS t_pages_wide")
+    # one scan split per (tiny) file, as a corpus of big files would get
+    old = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
+    try:
+        pages = spark.read.parquet(str(tmp_path / "pages"))
+        assert pages.rdd.getNumPartitions() == 4 * cores
+        wave.run_crawl(
+            spark,
+            ManifestParquetCatalog(str(tmp_path / "broadcast")),
+            cfg,
+            pages=pages,
+            dedup_gate="flag",
+        )
+        write_bucketed(pages, "t_pages_wide", 4 * cores)
+        wave.run_crawl(
+            spark,
+            ManifestParquetCatalog(str(tmp_path / "bucketed")),
+            cfg,
+            pages_table="t_pages_wide",
+            fetch_buckets=4 * cores,
+            dedup_gate="flag",
+        )
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", old)
+        spark.sql("DROP TABLE IF EXISTS t_pages_wide")
+    assert len(seen) == 2
+    for plan, n_parts in seen:
+        assert n_parts <= cores, (n_parts, plan)
+        # the only scan that reads html is the pages corpus
+        path = _ancestors_until(plan, "html:", "MapInPandas")
+        assert not any("Exchange" in n for n in path), f"{path}\n{plan}"
+        # the path really spans scan -> extract, through the narrowing
+        assert any("Coalesce" in n for n in path), f"{path}\n{plan}"

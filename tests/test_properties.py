@@ -7,7 +7,6 @@ import re
 from hypothesis import given, settings, strategies as st
 
 from newscrawl import extract as ex
-from newscrawl import functions as fn
 
 text_st = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=500
@@ -41,26 +40,6 @@ def test_fingerprint_format_and_determinism(t):
     f1 = ex.rolling_fingerprint(t)
     assert re.fullmatch(r"[0-9a-f]{16}", f1)
     assert ex.rolling_fingerprint(t) == f1
-
-
-@given(text_st, st.integers(min_value=1, max_value=50))
-@settings(max_examples=200, deadline=None)
-def test_chunk_paragraphs_bounded_and_lossless(t, mx):
-    chunks = fn.chunk_paragraphs(t, max_chars=mx)
-    assert all(len(c) <= mx for c in chunks)
-    # content preserved modulo whitespace
-    squash = lambda s: re.sub(r"\s+", "", s)
-    assert squash("".join(chunks)) == squash(t)
-
-
-@given(st.lists(st.text(min_size=1, max_size=20), max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_dedupe_preserve_first_is_subset_in_order(names):
-    out = fn.dedupe_preserve_first(names)
-    it = iter(names)
-    assert all(any(o == n for n in it) for o in out)  # order-preserving subsequence
-    keys = [fn._norm_key(o) for o in out]
-    assert len(keys) == len(set(keys))
 
 
 def test_global_rank_matches_sorted_order(spark):

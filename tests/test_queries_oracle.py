@@ -61,6 +61,40 @@ def test_query_matches_oracle(spark, duck, name):
     assert not mism, f"{name}: first value mismatches: {mism[:5]}"
 
 
+# dsir_importance's output is round(avg(lr), 4): a doc whose float
+# log-ratio sum is a tiny residual rounds to +0.0 or -0.0 depending on
+# summation order, which differs between Spark and DuckDB. These are the
+# known docs at sf0.001 (Spark +0.0, DuckDB -0.0) under the test session.
+DSIR_SIGNED_ZEROS_SF0001 = {350, 398}
+
+
+def test_dsir_signed_zero_residual_is_pinned(spark):
+    """Compare dsir_importance with DuckDB at sf0.001 WITHOUT the +-0.0
+    normalisation of _canon: the only differences are the known
+    sign-only zeros, no more and no fewer."""
+    sf = "/root/testdata/sf0.001"
+    fn, sql = QUERIES["dsir_importance"]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    want = {
+        int(d): (int(n), w)
+        for d, n, w in con.execute(
+            f"SELECT doc_id, n_tokens, dsir_weight FROM ({sql})"
+        ).fetchall()
+    }
+    got = {r.doc_id: (r.n_tokens, r.dsir_weight) for r in fn(spark, sf).collect()}
+    assert got.keys() == want.keys()
+    # repr tells -0.0 from 0.0
+    diff = {d for d in got if repr(got[d]) != repr(want[d])}
+    for d in diff:
+        (gn, gw), (wn, ww) = got[d], want[d]
+        assert gn == wn and gw == ww == 0.0, (d, got[d], want[d])
+        assert math.copysign(1.0, gw) != math.copysign(1.0, ww), d
+    assert diff == DSIR_SIGNED_ZEROS_SF0001, sorted(diff)
+
+
 def test_gemm_block_count_bounds():
     """B = ceil(n / target) with a floor: per-task GEMM memory is bounded
     by the block target at ANY corpus size."""
