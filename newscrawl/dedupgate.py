@@ -8,13 +8,15 @@ accreting LSH index — this module implements it over the wave catalog:
 
 - every kept article contributes its 4 band keys (8 minhash
   permutations — the four 32-bit hex slices of two md5 evaluations per
-  word-3-gram shingle — banded 4x2; identical parameters and hash
-  construction to the batch operators, so the two agree) to the
-  ``minhash_bands`` table, committed atomically with the wave.  One
-  per-batch kernel (batch_bands) computes the keys: a gated crawl wave
-  runs it inside the extract pass (extract.make_extract_kernel(
+  word-3-gram shingle — banded 4x2) to the ``minhash_bands`` table,
+  committed atomically with the wave.  One per-batch kernel
+  (batch_bands) computes the keys for the crawl and the batch
+  operators alike, so the two agree by construction: a gated crawl
+  wave runs it inside the extract pass (extract.make_extract_kernel(
   bands=True) emits a ``bands`` array column, posexploded off the
-  wave's extract cache), and band_rows runs it over any text frame;
+  wave's extract cache), and band_rows runs it over any text frame —
+  the registry's MinHash-LSH queries call it through
+  queries._minhash_bands;
 - the next wave probes the table with a broadcast semi-filter FIRST and
   aggregates SECOND: the historical index — the 10^10-row side at web
   scale — streams map-side through a BroadcastHashJoin against the
@@ -35,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-N_MINHASH = 8  # == queries.N_MINHASH; 4 bands x 2 rows
+N_MINHASH = 8  # 4 bands x 2 rows
 N_BANDS = N_MINHASH // 2
 
 # The in-kernel DuckDB band computation over an exploded (rid, s)
@@ -77,15 +79,16 @@ def batch_bands(con, ids, texts, id_col: str = "rid"):
     (id_col, band, key) rows, the 4 band keys of every document with >= 3
     tokens (fewer tokens -> no shingles -> no rows).
 
-    The spec is queries._minhash_signatures: word-3-gram shingles of
-    ``re.split(r"\\s+", text.lower())``, min over shingles of
-    md5(f'{i}|{shingle}') hex slices, banded 4x2.  The md5 evaluation
+    The spec is word-3-gram shingles of ``re.split(r"\\s+",
+    text.lower())``, min over shingles of md5(f'{i}|{shingle}') hex
+    slices, banded 4x2 — written out independently as the registry's
+    DuckDB oracle SQL (queries._minhash_sql_ctes) and as the tests'
+    pure-Python twin (tests/test_properties.py).  The md5 evaluation
     runs in DuckDB over the exploded (doc, shingle) frame
     (BAND_SQL_TEMPLATE): 2 md5 calls per shingle, each yielding four
-    32-bit hex-slice permutations — ~0.5 ms/doc where hashlib in a loop
-    was ~6 ms/doc, byte-identical output.  band_rows and the gated
-    extract kernel (extract.make_extract_kernel(bands=True)) both call
-    this function, so the gate has one band implementation."""
+    32-bit hex-slice permutations.  band_rows and the gated extract
+    kernel (extract.make_extract_kernel(bands=True)) both call this
+    function, so the engine has one band implementation."""
     import re
 
     import pandas as pd
@@ -115,14 +118,17 @@ def batch_bands(con, ids, texts, id_col: str = "rid"):
 def band_rows(df: DataFrame, id_col: str = "url", text_col: str = "text") -> DataFrame:
     """(id, band, key) LSH band keys of a text frame, one Arrow kernel
     riding the scan (batch_bands per batch).  Documents with <3 tokens
-    emit no rows (no shingles -> never near-dup by this gate).
+    emit no rows (no shingles -> never near-dup by this gate).  The id
+    column keeps its input type (the crawl's url strings, the
+    registry's bigint doc_ids).
 
     The crawl's gated waves do not call this: their extract kernel emits
     the same keys as a ``bands`` column in the extract pass itself, and
-    run_wave posexplodes them.  band_rows serves text-only callers
-    (wave_flags without ``bands``, the benchmark's layer replay, tests).
+    run_wave posexplodes them.  band_rows serves text-only callers: the
+    registry's MinHash-LSH queries (queries._minhash_bands), wave_flags
+    without ``bands``, the benchmark's layer replay and tests.
     tests/test_dedupgate.py::test_band_spec_matches_batch_minhash diffs
-    it against the pure-Python batch kernel, and
+    it against the pure-Python spec, and
     ::test_extract_bands_match_band_rows diffs the extract column
     against it."""
     import pandas as pd
@@ -141,8 +147,9 @@ def band_rows(df: DataFrame, id_col: str = "url", text_col: str = "text") -> Dat
                  "key": pd.Series(dtype=object)}
             )
 
+    id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, text_col).mapInPandas(
-        kernel, schema=f"{id_col} string, band int, key string"
+        kernel, schema=f"{id_col} {id_type}, band int, key string"
     )
 
 

@@ -19,13 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from .dedupgate import N_MINHASH, band_rows
+
 STOPWORDS = (
     "the", "a", "of", "and", "to", "in", "for", "on", "is", "was",
     "it", "that", "with", "as", "at", "by",
 )
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
-N_MINHASH = 8  # 4 bands x 2 rows
 JACCARD_THRESHOLD = 0.10
 
 
@@ -655,67 +656,22 @@ def _terms(spark, sf_dir):
     )
 
 
-def _minhash_signatures(spark, sf_dir, docs=None):
-    """(doc_id, h0..h7) MinHash signatures: the 8 permutations are the
-    four 8-hex-char (32-bit) slices of TWO md5 evaluations per shingle —
-    h_i = min over word-3-gram shingles of
-    hex(md5(f'{i//4}|{shingle}'))[8*(i%4) : 8*(i%4)+8].  Disjoint bit
-    ranges of one md5 are independent uniform hashes, so this is a valid
-    8-permutation family at 1/4 the hash cost of md5-per-permutation —
-    the hash count is THE cost of the dedup subsystem at corpus scale
-    (8000 md5/doc at real page sizes before, 2000 now).  Deterministic
-    and engine-neutral: min of hex slices == min of the 32-bit values.
-    Computed per doc in one Arrow kernel instead of 8 min-aggs over
-    exploded shingle rows: the signature rides the scan, nothing
-    explodes or shuffles before the (tiny) band join.  The default-
-    corpus frame is session-memoized (every minhash-family query and
-    both LSH join sides share it); a ``docs=`` caller owns persistence."""
-    import hashlib
-    import re
-
-    import pandas as pd
-
-    def kernel(batch_iter):
-        for pdf in batch_iter:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = re.split(r"\s+", (text or "").lower())
-                if len(toks) < 3:
-                    continue
-                shingles = set(
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                )
-                d0 = [
-                    hashlib.md5(f"0|{s}".encode("utf-8")).hexdigest()
-                    for s in shingles
-                ]
-                d1 = [
-                    hashlib.md5(f"1|{s}".encode("utf-8")).hexdigest()
-                    for s in shingles
-                ]
-                ids.append(doc_id)
-                sigs.append(
-                    tuple(
-                        min(d[8 * k : 8 * k + 8] for d in ds)
-                        for ds in (d0, d1)
-                        for k in range(4)
-                    )
-                )
-            out = pd.DataFrame(
-                sigs, columns=[f"h{i}" for i in range(N_MINHASH)], dtype="object"
-            )
-            out.insert(0, "doc_id", pd.Series(ids, dtype="int64"))
-            yield out
-
-    ddl = "doc_id long, " + ", ".join(f"h{i} string" for i in range(N_MINHASH))
+def _minhash_bands(spark, sf_dir, docs=None):
+    """(doc_id, band, key) MinHash-LSH band keys, computed by the crawl
+    gate's kernel (dedupgate.band_rows): 8 permutations = the four
+    8-hex-char slices of md5('0|'+s) and md5('1|'+s) per word-3-gram
+    shingle s, banded 4x2, so key = h{2b} || h{2b+1}.  Documents with <3
+    tokens have no rows.  The default-corpus frame is session-memoized
+    (every minhash-family query and both LSH join sides share it); a
+    ``docs=`` caller owns persistence."""
     if docs is not None:
-        return docs.select("doc_id", "text").mapInPandas(kernel, schema=ddl)
+        return band_rows(docs, "doc_id", "text")
     return session_memo(
         spark,
-        "minhash_signatures",
-        lambda: _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-        .mapInPandas(kernel, schema=ddl)
-        .persist(),
+        "minhash_bands",
+        lambda: band_rows(
+            _spread(_t(spark, sf_dir, "documents")), "doc_id", "text"
+        ).persist(),
         sf_dir,
     )
 
@@ -725,26 +681,10 @@ def q_minhash_lsh_candidates(spark, sf_dir, docs=None):
     3-gram shingles (hex-slice permutations of md5(seed|shingle) — a
     deterministic random permutation both engines share), banded 4x2;
     candidate pairs share at least one band. Oracle-able because md5 is
-    identical everywhere."""
-    sig = _minhash_signatures(spark, sf_dir, docs=docs)
-    # ONE explode per evaluation (a 4-way union of selects would
-    # re-evaluate the signature kernel once per band per join side)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            F.col(f"h{2*b}"), F.col(f"h{2*b+1}")
-                        ).alias("key"),
-                    )
-                    for b in range(N_MINHASH // 2)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
+    identical everywhere.  The band keys are the crawl near-dup gate's
+    (_minhash_bands -> dedupgate.band_rows), so the registry and the
+    gate agree on what a near-dup is."""
+    bands = _minhash_bands(spark, sf_dir, docs=docs)
     a = bands.alias("a")
     c = bands.alias("b")
     return (
@@ -762,7 +702,7 @@ def q_minhash_lsh_candidates(spark, sf_dir, docs=None):
 def _minhash_sql_ctes() -> str:
     """Shared WITH-prefix (shingles -> signatures -> band keys) for the
     minhash candidate and estimate oracles.  Spec mirror of
-    _minhash_signatures: h_i = min over shingles of the (i%4)-th
+    dedupgate.batch_bands: h_i = min over shingles of the (i%4)-th
     8-hex-char slice of md5((i//4) || '|' || shingle) — two md5
     evaluations per shingle, staged in their own CTE so the oracle also
     computes each md5 once."""
@@ -2663,9 +2603,9 @@ def _classify_staged(df, topics: bool = True, sentiment: bool = False):
     `_ts{i}` / sentiment `_pos`/`_neg` each computed once, then `_tmax`.
     The single-Column form inlined `split(lower(text))` into every
     score comparison — ~160 evaluations per row in topic_classify's
-    physical plan (plans/r07/topic_classify_before.txt); staging keeps
-    each non-cheap subexpression a named attribute, which CollapseProject
-    provably leaves alone (multi-referenced non-cheap producers).  Tie
+    physical plan; staging keeps each non-cheap subexpression a named
+    attribute, which CollapseProject provably leaves alone
+    (multi-referenced non-cheap producers).  Tie
     semantics are unchanged: the label chain below compares the staged
     scores against the staged max in candidate order."""
     from .extract import CANDIDATE_TOPICS, _TOPIC_WORDS, NEG_WORDS, POS_WORDS
@@ -3068,22 +3008,31 @@ def q_minhash_jaccard_est(spark, sf_dir):
     fraction of the 8 signature components that agree — the O(1)-per-
     pair sketch estimate that ranks/filters candidates without touching
     the shingle sets. At 100 TB this is the cheap middle tier between
-    the band join (recall) and the exact verify (precision): signatures
-    are already materialized, so the estimate costs one tiny join."""
-    sig = _minhash_signatures(spark, sf_dir)
+    the band join (recall) and the exact verify (precision): band keys
+    are already materialized, so the estimate costs one tiny join.
+    Each band key is two 8-hex signature components, so the pair's
+    agreeing components are its agreeing key halves over the 4 bands."""
+    bands = _minhash_bands(spark, sf_dir)
     cands = q_minhash_lsh_candidates(spark, sf_dir)
+    a = bands.select(
+        F.col("doc_id").alias("doc_a"), "band", F.col("key").alias("ka")
+    )
+    b = bands.select(
+        F.col("doc_id").alias("doc_b"), "band", F.col("key").alias("kb")
+    )
     agree = sum(
-        (F.col(f"sa.h{i}") == F.col(f"sb.h{i}")).cast("int")
-        for i in range(N_MINHASH)
+        (F.substring("ka", p, 8) == F.substring("kb", p, 8)).cast("int")
+        for p in (1, 9)
     )
     return (
-        cands.join(sig.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sig.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            # k/8 is an exact binary fraction: round(,4) cross-engine-safe
-            F.round(agree / F.lit(float(N_MINHASH)), 4).alias("jaccard_est"),
+        cands.join(a, "doc_a")
+        .join(b, ["doc_b", "band"])
+        .groupBy("doc_a", "doc_b")
+        # k/8 is an exact binary fraction: round(,4) cross-engine-safe
+        .agg(
+            F.round(F.sum(agree) / F.lit(float(N_MINHASH)), 4).alias(
+                "jaccard_est"
+            )
         )
     )
 
@@ -5221,7 +5170,7 @@ def q_corpus_prepare(spark, sf_dir):
     The three branches share ONE persisted corpus scan (doc_id, lang,
     text) instead of re-scanning per branch — DataFrame branches don't
     share subplans, so without the persist the quality gates, the
-    signature kernel, and the survivor join each read the corpus
+    band kernel, and the survivor join each read the corpus
     independently.  The shared frame is session-memoized —
     re-persisting a fresh copy on every call would accumulate executor
     cache across bench reps / long sessions."""
@@ -5240,10 +5189,10 @@ def q_corpus_prepare(spark, sf_dir):
         F.col("keep") == 1
     ).select("doc_id", "n_tokens")
     # the dedup leg deliberately takes the DEFAULT corpus path, not
-    # docs=shared: its cost is the signature kernel, and the default
-    # path hits the session-memoized signatures (one persisted signature
-    # frame reused by every minhash-family query this session), whereas
-    # a docs= frame recomputes signatures per call (2.4 s -> 4.0 s
+    # docs=shared: its cost is the band kernel, and the default path
+    # hits the session-memoized band rows (one persisted band frame
+    # reused by every minhash-family query this session), whereas a
+    # docs= frame recomputes band keys per call (2.4 s -> 4.0 s
     # measured when the r6 docs-threading fix briefly rerouted it)
     kept_d = q_minhash_dedup_keep(spark, sf_dir).filter(
         F.col("kept") == 1
@@ -6181,24 +6130,11 @@ def q_lsh_index_stats(spark, sf_dir):
     hazard: per band, bucket count, max bucket size, and the candidate
     pairs the band contributes (sum over buckets of k*(k-1)/2, exact
     integers).  One groupBy over the band table; never touches pairs."""
-    sig = _minhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            F.col(f"h{2*b}"), F.col(f"h{2*b+1}")
-                        ).alias("key"),
-                    )
-                    for b in range(N_MINHASH // 2)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    buckets = bands.groupBy("band", "key").agg(F.count("*").alias("k"))
+    buckets = (
+        _minhash_bands(spark, sf_dir)
+        .groupBy("band", "key")
+        .agg(F.count("*").alias("k"))
+    )
     return buckets.groupBy("band").agg(
         F.count("*").alias("n_buckets"),
         F.max("k").alias("max_bucket"),

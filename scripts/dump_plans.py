@@ -111,9 +111,9 @@ def main() -> None:
         ),
         (
             "minhash_lsh_candidates",
-            "Signatures come from one Arrow kernel over the scan (no "
-            "shingle explode); only the tiny banded key table shuffles "
-            "into the self-join.",
+            "Band keys come from the crawl gate's Arrow kernel "
+            "(dedupgate.band_rows) over the scan (no shingle explode); "
+            "only the tiny band key table shuffles into the self-join.",
         ),
         (
             "embedding_near_dup",

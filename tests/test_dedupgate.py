@@ -227,39 +227,31 @@ def test_same_wave_identical_sort_key_still_first_wins(spark):
     cached.unpersist()
 
 
-def test_band_spec_matches_batch_minhash(spark, tmp_path):
-    """Spec-drift guard: dedupgate.band_rows must produce EXACTLY the
-    band keys the batch operators derive via queries._minhash_signatures
-    (same shingles, same md5 permutations, same 4x2 banding) — the gate
-    and the batch dedup must agree on what a near-dup is."""
-    import pandas as pd
+def test_band_spec_matches_batch_minhash(spark):
+    """Spec-drift guard: dedupgate.band_rows — the one band kernel the
+    crawl gate and the registry's MinHash-LSH queries share — must
+    produce EXACTLY the band keys of the independently written
+    pure-Python spec (same shingles, same md5 permutations, same 4x2
+    banding).  bigint ids stay bigint; <3-token docs have no rows."""
+    from test_properties import _band_keys_python_spec
 
     from newscrawl import dedupgate
-    from newscrawl.queries import N_MINHASH, _minhash_signatures
 
     texts = [
         (0, "the quick brown fox jumps over the lazy dog again and again"),
         (1, "pack my box with five dozen liquor jugs for the long trip"),
         (2, "the quick brown fox jumps over the lazy dog again and again"),
+        (3, "Straße  ſchön İstanbul 東京 the naïve café  über alles"),
+        (4, "two words"),
     ]
-    d = tmp_path / "spec"
-    spark.createDataFrame(texts, "doc_id bigint, text string").coalesce(
-        1
-    ).write.parquet(str(d / "documents.parquet"))
-    sig = _minhash_signatures(spark, str(d)).toPandas()
-    want = set()
-    for _i, row in sig.iterrows():
-        for b in range(N_MINHASH // 2):
-            want.add(
-                (str(row["doc_id"]), b, row[f"h{2*b}"] + row[f"h{2*b+1}"])
-            )
-    docs = spark.createDataFrame(
-        [(str(i), t) for i, t in texts], "url string, text string"
-    )
-    got = {
-        (r.url, r.band, r.key)
-        for r in dedupgate.band_rows(docs).collect()
+    docs = spark.createDataFrame(texts, "doc_id bigint, text string")
+    out = dedupgate.band_rows(docs, "doc_id", "text")
+    assert out.schema["doc_id"].dataType.simpleString() == "bigint"
+    want = {
+        (i, b, k) for i, t in texts for b, k in _band_keys_python_spec(t)
     }
+    got = {(r.doc_id, r.band, r.key) for r in out.collect()}
+    assert {i for i, _b, _k in want} == {0, 1, 2, 3}
     assert got == want
 
 
