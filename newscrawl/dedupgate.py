@@ -17,13 +17,16 @@ accreting LSH index — this module implements it over the wave catalog:
   wave's extract cache), and band_rows runs it over any text frame —
   the registry's MinHash-LSH queries call it through
   queries._minhash_bands;
-- the next wave probes the table with a broadcast semi-filter FIRST and
-  aggregates SECOND: the historical index — the 10^10-row side at web
-  scale — streams map-side through a BroadcastHashJoin against the
-  wave's distinct (band, key) set and never shuffles; only the matched
-  rows (bounded by wave keys x their sharers) are then aggregated to one
-  representative per key.  Within the wave, first-wins by the crawl sort
-  key (the same tie-break as the engine's exact first-wins dedup);
+- the next wave probes the table in ONE earliest-holder pass: a
+  broadcast semi-filter FIRST — the historical index, the 10^10-row
+  side at web scale, streams map-side through a BroadcastHashJoin
+  against the wave's (band, key) rows and never shuffles — then one
+  window per (band, key) over the matched history (rank 0) and the
+  wave's rows (rank 1, with their crawl sort key) finds each key's
+  earliest holder, and one groupBy per url turns the wave rows whose
+  key has an earlier holder into flags.  A prior-wave canonical
+  outranks any wave article; within the wave, first-wins by the crawl
+  sort key (the same tie-break as the engine's exact first-wins dedup);
 - ``flag`` mode records decisions in ``near_dup_flags``; ``drop`` mode
   additionally withholds flagged articles from the articles sink (their
   bands are NOT indexed — the index holds canonical documents only).
@@ -155,10 +158,11 @@ def band_rows(df: DataFrame, id_col: str = "url", text_col: str = "text") -> Dat
 
 # Broadcast ceiling for the probe's wave-key set: ~80 bytes per
 # (band, key) row puts 10M distinct keys around 1 GB of driver/executor
-# broadcast — the practical limit.  At 4 band keys/article that bounds
-# the BROADCAST probe at wave sizes of ~2.5M articles; beyond it, pass
-# probe="bucketed" (or "auto", which counts) to switch to the
-# co-located band-index join below.
+# broadcast — the practical limit (the broadcast ships the wave's band
+# rows; a key repeats there only across a wave's own near-dups).  At 4
+# band keys/article that bounds the BROADCAST probe at wave sizes of
+# ~2.5M articles; beyond it, pass probe="bucketed" (or "auto", which
+# counts) to switch to the co-located band-index join below.
 GATE_BROADCAST_MAX_KEYS = 10_000_000
 
 
@@ -228,8 +232,10 @@ def wave_flags(
       gated extract kernel's ``bands`` column posexploded off the
       wave's extract cache (run_wave).  ``new_articles`` is then unused
       and may be None; the rows already carry their sort key, so the
-      same-wave arm needs no (url -> sort key) join, and nothing is
-      persisted here.
+      probe needs no (url -> sort key) join, and nothing is persisted
+      here.
+    ``probe`` must be "broadcast", "bucketed" or "auto" (ValueError
+    otherwise, checked before any Spark work).
 
     Returns (flags, kept_bands, band_frame) — band_frame is the band
     frame both outputs derive from (persisted on the text path); the
@@ -243,12 +249,14 @@ def wave_flags(
     - kept_bands(url, band, key): band rows of the NON-flagged articles —
       what the caller appends to the index.
 
-    Plan shape at scale (``probe="broadcast"``, the default): bands_new
-    is one wave (bounded) and broadcasts; the prior index streams
-    map-side through a BroadcastHashJoin semi-filter — no Exchange, no
-    aggregation touches the unmatched history — and only the matched
-    rows are shuffled/aggregated. The same-wave check is a self-join of
-    the broadcast-sized frame.  Nothing driver-side.
+    Plan shape at scale (``probe="broadcast"``, the default): the
+    wave's (band, key) rows (one wave, bounded) broadcast; the prior
+    index streams map-side through a BroadcastHashJoin left-semi filter
+    — no Exchange, no aggregation touches the unmatched history.  The
+    matched rows and the wave's rows then take one hash exchange on
+    (band, key) for the earliest-holder window and one on url for the
+    per-article aggregate: with ``bands``, two shuffles and one join in
+    all (tests/test_plans.py).  Nothing driver-side.
 
     Broadcast bound: the wave's distinct (band, key) set must fit a
     broadcast — GATE_BROADCAST_MAX_KEYS (~2.5M articles/wave at 4
@@ -263,6 +271,8 @@ def wave_flags(
     distinct keys (one job over the already-persisted band frame) and
     picks; both paths are output-identical (hypothesis property +
     equivalence tests, tests/test_dedupgate.py)."""
+    if probe not in ("broadcast", "bucketed", "auto"):
+        raise ValueError(f"unknown probe mode {probe!r}")
     if bands is None:
         bands_new = band_rows(new_articles).persist()
         keyed = bands_new.join(
@@ -272,28 +282,35 @@ def wave_flags(
         bands_new = bands.select("url", "band", "key")
         keyed = bands.select("url", "band", "key", F.col(sort_col).alias("_sk"))
 
-    # Fanout bound (the same k^2 hazard as the PageRank chunk self-join,
-    # fixed structurally instead of by a cap): both probe arms
-    # pre-aggregate to ONE row per (band, key) before the probe join,
-    # which preserves the output EXACTLY —
-    #   - an article is flagged iff ANY prior/earlier sharer exists,
-    #     which is equivalent to "the key's minimal representative is
-    #     prior/earlier";
-    #   - n_band_hits counts DISTINCT matching keys, not sharers;
-    #   - matched_url is the minimal sharer, which is the key minimum.
-    # So k docs sharing one boilerplate key cost k rows, never k^2.
+    # One question per (band, key): who is its earliest holder?  Holders
+    # are ranked (rank, sort key, url): every prior-wave canonical (rank
+    # 0, null sort key) outranks every wave article (rank 1), so a wave
+    # row is flagged iff its key's minimum sorts strictly before its own
+    # (rank, sort key, url) — a prior holder, or an EARLIER article of
+    # this wave (first-wins by the full (sort key, url) tuple, the
+    # engine's exact-dedup tie-break: two near-dups with an identical
+    # sort key still flag the later url).
     #
-    # ORDER MATTERS at scale: semi-filter FIRST, aggregate SECOND.  The
-    # BroadcastHashJoin against the wave's distinct keys runs map-side
-    # over the accreting index (no shuffle of the 10^10-row side); the
-    # groupBy then only sees the matched rows, bounded by the wave's
-    # keys x their sharers.  Aggregating before filtering (the r4 shape)
-    # would hash-shuffle the ENTIRE history every wave.  Output is
-    # identical either way: min over all prior holders of a shared key
-    # == min over the sharers of that key.
+    # ORDER MATTERS at scale: semi-filter FIRST, rank SECOND.  The
+    # BroadcastHashJoin against the wave's (band, key) rows runs
+    # map-side over the accreting index (no shuffle of the 10^10-row
+    # side); the window then only sees the matched history, bounded by
+    # the wave's keys x their sharers.
+    #
+    # Fanout bound (the k^2 hazard of the PageRank chunk self-join,
+    # fixed structurally): each holder of a (band, key) is ONE row of
+    # its rank, and the key's minimum is a window aggregate over those
+    # rows, not a pairwise join — k docs sharing one boilerplate key
+    # cost k rows, never k^2.
+    def ranked(df: DataFrame, rank: int, sk) -> DataFrame:
+        holder = F.struct(F.lit(rank).alias("r"), sk.alias("sk"), F.col("url").alias("u"))
+        return df.select("url", "band", "key", holder.alias("_h"))
+
+    holders = ranked(keyed, 1, F.col("_sk"))
     if prior_bands is not None:
-        new_keys = bands_new.select("band", "key").distinct()
         mode = probe
+        if mode != "broadcast":
+            new_keys = bands_new.select("band", "key").distinct()
         if mode == "auto":
             mode = (
                 "broadcast"
@@ -302,13 +319,15 @@ def wave_flags(
             )
         if mode == "broadcast":
             prior = prior_bands.select("url", "band", "key")
-            matched_prior = prior.join(F.broadcast(new_keys), ["band", "key"])
-        elif mode == "bucketed":
+            wave_keys = F.broadcast(bands_new.select("band", "key"))
+        else:
             # beyond the broadcast bound: write THIS WAVE's key set
             # bucketed by (band, key); against a bands_table maintained
             # with the same bucket spec the semi-filter plans as a
             # co-located sort-merge join — the history side scans
-            # straight into the join, no Exchange
+            # straight into the join, no Exchange.  The merge hint keeps
+            # that plan when the key table's file size would otherwise
+            # auto-broadcast it.
             spark = bands_new.sparkSession
             import hashlib as _hl
 
@@ -331,86 +350,41 @@ def wave_flags(
                 if bands_table is not None
                 else prior_bands
             ).select("url", "band", "key")
-            matched_prior = prior.join(
-                spark.table(keys_table), ["band", "key"]
-            )
-        else:
-            raise ValueError(f"unknown probe mode {probe!r}")
-        prior_keys = matched_prior.groupBy("band", "key").agg(
-            F.min("url").alias("_purl")
-        )
-        # join the (wave-key-bounded) prior representatives back to the
-        # wave's band rows: broadcast-sized in broadcast mode; in
-        # bucketed mode both sides are wave-bounded, so a plain
-        # shuffle join on (band, key) is the right plan
-        _new_side = bands_new.select(F.col("url").alias("_nurl"), "band", "key")
-        if mode == "broadcast":
-            _new_side = F.broadcast(_new_side)
-        hits_prior = (
-            prior_keys.join(_new_side, ["band", "key"])
-            .groupBy(F.col("_nurl").alias("url"))
-            .agg(
-                F.min("_purl").alias("matched_url"),
-                F.count("*").alias("n_band_hits"),
-            )
-            .withColumn("scope", F.lit("prior_wave"))
-        )
-    else:
-        hits_prior = None
+            wave_keys = spark.table(keys_table).hint("merge")
+        matched_prior = prior.join(wave_keys, ["band", "key"], "left_semi")
+        no_sk = F.lit(None).cast(keyed.schema["_sk"].dataType)
+        holders = ranked(matched_prior, 0, no_sk).unionByName(holders)
 
-    # same-wave: an article is flagged iff an EARLIER-sorted article of
-    # this wave shares a band key (first-wins — the earliest article in
-    # crawl order is the canonical one and is never flagged by this
-    # arm).  Per (band, key) only the MINIMAL (sort, url) representative
-    # is joined back: b shares a key with an earlier article iff the
-    # key's earliest holder sorts before b.
-    key_min = keyed.groupBy("band", "key").agg(
-        F.min(F.struct(F.col("_sk").alias("_ask"), F.col("url").alias("_aurl"))).alias("_m")
-    ).select("band", "key", F.col("_m._ask").alias("_ask"), F.col("_m._aurl").alias("_aurl"))
-    # strict ordering on the FULL (sort_key, url) tuple — two near-dups
-    # sharing an identical sort_key must still flag the later url (the
-    # representative is chosen by the same tuple order, so a bare
-    # _ask < _sk comparison would let both survive)
-    hits_same = (
-        keyed.join(key_min, ["band", "key"])
-        .filter(
-            F.struct(F.col("_ask"), F.col("_aurl"))
-            < F.struct(F.col("_sk").alias("_ask"), F.col("url").alias("_aurl"))
-        )
-        .groupBy("url")
-        .agg(
-            F.min(F.struct("_ask", "_aurl")).getField("_aurl").alias(
-                "matched_url"
-            ),
-            F.count("*").alias("n_band_hits"),
-        )
-        .withColumn("scope", F.lit("same_wave"))
-    )
-    # transitive same-wave chains resolve to the FIRST article only as
-    # canonical is defined per pair; an article flagged via a flagged
-    # intermediate stays flagged (greedy keep-first, same spec as
-    # queries.q_semantic_dedup)
-
-    both = (
-        hits_same
-        if hits_prior is None
-        else hits_prior.unionByName(hits_same)
-    )
-    w = W.partitionBy("url").orderBy(
-        # prior_wave outranks same_wave; then the earliest match
-        F.when(F.col("scope") == "prior_wave", 0).otherwise(1),
-        "matched_url",
-    )
+    hits = holders.withColumn(
+        "_m", F.min("_h").over(W.partitionBy("band", "key"))
+    ).filter((F.col("_h.r") == 1) & (F.col("_m") < F.col("_h")))
+    # per article: its earliest match overall (a prior holder whenever
+    # there is one — prior_wave outranks same_wave), and n_band_hits =
+    # its DISTINCT matching keys of that scope.  Transitive same-wave
+    # chains stay flagged (greedy keep-first, same spec as
+    # queries.q_semantic_dedup).
     # flags is persisted because BOTH gate outputs traverse it (the
     # flag-table write directly, the band append via the anti-join), so
-    # the probe joins and the first-wins window run once when the two
-    # writes run in that order (run_wave: one pool task). Bounded: one
-    # row per flagged article of ONE wave. The caller unpersists it
-    # after the wave's writes commit.
+    # the probe runs once when the two writes run in that order
+    # (run_wave: one pool task). Bounded: one row per flagged article of
+    # ONE wave. The caller unpersists it after the wave's writes commit.
     flags = (
-        both.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        hits.groupBy("url")
+        .agg(
+            F.min("_m").getField("u").alias("matched_url"),
+            F.count(F.when(F.col("_m.r") == 0, 1)).alias("_n0"),
+            F.count("*").alias("_n"),
+        )
+        .select(
+            "url",
+            "matched_url",
+            F.when(F.col("_n0") > 0, F.col("_n0"))
+            .otherwise(F.col("_n"))
+            .alias("n_band_hits"),
+            F.when(F.col("_n0") > 0, F.lit("prior_wave"))
+            .otherwise(F.lit("same_wave"))
+            .alias("scope"),
+        )
     ).persist()
     kept_bands = bands_new.join(
         flags.select("url"), "url", "left_anti"

@@ -23,8 +23,9 @@ get_all_articles.py:6-19 + classifier.py:194-320):
       -> split: articles Δ | seen Δ | carry (fetch-fail or <100 chars,
                retried next wave) | child frontier rows
       -> near-dup gate (dedupgate.py): band rows posexploded off the
-         extract cache, probed against the band index and first-wins
-         within the wave; flags persisted for their two writes
+         extract cache; one earliest-holder pass per (band, key) over
+         the semi-filtered band index and the wave's rows (first-wins
+         within the wave); flags persisted for their two writes
       -> atomic multi-table commit, output jobs submitted concurrently
          (frontier overwrite, seen/articles/metrics append, bloom
          shards overwrite, one task writing near_dup_flags then
@@ -136,6 +137,16 @@ def _load_spill(spark: SparkSession, catalog: ManifestParquetCatalog) -> "seense
     )
 
 
+def _check_modes(scheduler: str, dedup_gate: str | None) -> None:
+    """ValueError for a mode string the wave would otherwise read as
+    its default (a misspelt gate as flag mode, a misspelt scheduler as
+    reference)."""
+    if scheduler not in ("reference", "scaled"):
+        raise ValueError(f"unknown scheduler {scheduler!r}")
+    if dedup_gate not in (None, "flag", "drop"):
+        raise ValueError(f"unknown dedup_gate mode {dedup_gate!r}")
+
+
 def run_wave(
     spark: SparkSession,
     catalog: ManifestParquetCatalog,
@@ -209,6 +220,7 @@ def run_wave(
     large to broadcast and html bytes still never move. Default (None):
     broadcast the slim candidate metadata into the pages scan.
     """
+    _check_modes(scheduler, dedup_gate)
     wid = wave_id_for(wave_index)
     _timing = bool(os.environ.get("NEWSCRAWL_TIMING"))
     _t = time.perf_counter()
@@ -382,6 +394,7 @@ def run_wave(
     failed = kept.join(extracted.select("url"), "url", "left_anti").select(
         *FRONTIER_COLS
     )
+    nd_flags = None
     try:
         yielded = extracted.filter(F.col("yielded"))
 
@@ -454,7 +467,7 @@ def run_wave(
                     nd_flags.select("url"), "url", "left_anti"
                 )
         else:
-            nd_flags = nd_kept_bands = None
+            nd_kept_bands = None
 
         # quality sink gate (audit-trailed): below-threshold articles go
         # to quality_flags instead of the articles table
@@ -870,8 +883,6 @@ def run_wave(
             if f_q_flags is not None:
                 f_q_flags.result()
             accel_rows = f_accel.result() if f_accel is not None else None
-        if dedup_gate:
-            nd_flags.unpersist()
         tick("parallel writes+stats")
 
         n_yielded = sum(r.n for r in stat_rows)
@@ -967,6 +978,8 @@ def run_wave(
         tick("commit")
         return metrics
     finally:
+        if nd_flags is not None:
+            nd_flags.unpersist()
         extracted.unpersist()
         kept.unpersist()
         unseen.unpersist()
@@ -996,6 +1009,7 @@ def run_crawl(
 ) -> list[dict]:
     """Run (or resume) a crawl. Already-committed waves are skipped —
     replaying is a no-op, which is the resume/idempotence guarantee."""
+    _check_modes(scheduler, dedup_gate)
     n_waves = n_waves if n_waves is not None else cfg.n_waves
     if pages is None and pages_table is None:
         pages = synth.build_pages_df(spark, cfg)

@@ -22,8 +22,13 @@ def fmt(df) -> str:
     s = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-    # trim the giant lexicon CASE expressions for readability
-    s = re.sub(r"CASE WHEN .*? END", "CASE …lexicon argmax… END", s)
+    # trim the giant lexicon CASE expressions for readability (short
+    # CASE expressions, such as the near-dup gate's, stay as they are)
+    s = re.sub(
+        r"CASE WHEN .*? END",
+        lambda m: m[0] if len(m[0]) < 100 else "CASE …lexicon argmax… END",
+        s,
+    )
     s = "\n".join(line[:160] for line in s.splitlines())
     return s.strip()
 
@@ -306,19 +311,23 @@ def main() -> None:
         sections.append(
             (
                 "engine path: incremental near-dup gate probe "
-                "(semi-filter first, aggregate second)",
+                "(semi-filter first, one earliest-holder pass)",
                 "The persistent minhash_bands index (the FileScan below — "
                 "the 10^10-row side at web scale) feeds the "
-                "BroadcastHashJoin against the wave's distinct band keys "
+                "BroadcastHashJoin LeftSemi against the wave's band keys "
                 "DIRECTLY: no Exchange, no HashAggregate touches unmatched "
-                "history. Only the matched rows (bounded by wave keys x "
-                "sharers) are aggregated to one representative per key "
-                "before the flag join. Output-identical to aggregating "
-                "first (min over prior holders of a shared key == min "
-                "over its sharers), but the history-side shuffle is gone — "
-                "asserted in test_plans.py::"
+                "history — asserted in test_plans.py::"
                 "test_dedup_gate_probe_broadcasts_new_side via an "
-                "ancestor walk from the prior scan to the probe join.",
+                "ancestor walk from the prior scan to the probe join. "
+                "The matched history (rank 0) and the wave's band rows "
+                "(rank 1, with their sort key) union into ONE window per "
+                "(band, key) that finds each key's earliest holder; the "
+                "wave rows whose key has an earlier holder aggregate per "
+                "url into the flags (prior_wave outranks same_wave). This "
+                "text-input form also joins each band row to its sort key "
+                "(the crawl passes band rows that carry it); with band "
+                "rows the plan has 2 hash exchanges and 1 join "
+                "(test_dedup_gate_flags_plan_is_one_earliest_holder_pass).",
                 fmt(flags),
             )
         )
@@ -360,9 +369,11 @@ def main() -> None:
             "probe=\"bucketed\" writes the wave's keys with the SAME "
             "(band, key) bucket spec as the persistent index table "
             "(dedupgate.write_band_index_bucketed) and the semi-filter "
-            "plans as the SortMergeJoin below with NO Exchange on the "
-            "history scan — co-located, the bucketing.py fetch-join "
-            "pattern. Both probe paths are output-identical "
+            "plans as the SortMergeJoin LeftSemi below (a merge hint, so "
+            "a small key table does not auto-broadcast) with NO Exchange "
+            "on the history scan — co-located, the bucketing.py "
+            "fetch-join pattern. The earliest-holder pass above it is "
+            "the broadcast path's. Both probe paths are output-identical "
             "(test_dedupgate.py::test_bucketed_probe_matches_broadcast); "
             "the co-location is asserted in test_plans.py::"
             "test_dedup_gate_bucketed_probe_is_colocated.",

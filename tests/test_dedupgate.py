@@ -433,3 +433,116 @@ def test_extract_bands_match_band_rows(spark):
         assert by_url["long"].bands == by_url["long-copy"].bands
     finally:
         out.unpersist()
+
+
+def _flags_spec(prior, wave_rows):
+    """Brute-force spec of wave_flags over (url, band, key) prior rows
+    and (url, band, key, sort_key) wave rows: (flags, kept_bands) sets.
+
+    An article is flagged prior_wave iff a prior row shares one of its
+    (band, key)s — matched_url the minimal such prior url; else
+    same_wave iff an article with a smaller (sort_key, url) shares one —
+    matched_url the url of the minimal such sharer.  n_band_hits counts
+    the article's distinct keys of the reported scope."""
+    prior_holders: dict = {}
+    for u, b, k in prior or []:
+        prior_holders.setdefault((b, k), set()).add(u)
+    wave_holders: dict = {}
+    for u, b, k, sk in wave_rows:
+        wave_holders.setdefault((b, k), set()).add((sk, u))
+    by_url: dict = {}
+    for u, b, k, sk in wave_rows:
+        by_url.setdefault(u, set()).add((b, k, sk))
+    flags = set()
+    for u, rows in by_url.items():
+        p_keys = {(b, k) for b, k, _sk in rows if (b, k) in prior_holders}
+        if p_keys:
+            m = min(min(prior_holders[bk]) for bk in p_keys)
+            flags.add((u, m, len(p_keys), "prior_wave"))
+            continue
+        earlier = {
+            (b, k): min(h for h in wave_holders[(b, k)] if h < (sk, u))
+            for b, k, sk in rows
+            if min(wave_holders[(b, k)]) < (sk, u)
+        }
+        if earlier:
+            flags.add((u, min(earlier.values())[1], len(earlier), "same_wave"))
+    flagged = {f[0] for f in flags}
+    kept = {(u, b, k) for u, b, k, _sk in wave_rows if u not in flagged}
+    return flags, kept
+
+
+def _random_gate_case(rng, i):
+    """(prior rows or None, wave rows) over small url/key/sort-key pools,
+    so keys are shared within the wave and with the prior index, sort
+    keys tie, and some wave urls are also prior urls."""
+    n_keys = rng.choice([2, 3, 6])
+    wave_urls = rng.sample([f"https://h/u{j:02d}" for j in range(12)], rng.randint(3, 8))
+    wave_rows = []
+    for u in wave_urls:
+        sk = f"s{rng.randint(0, 2)}"
+        for b in range(4):
+            k = "hot" if i % 4 == 3 and b == 0 else f"k{rng.randint(0, n_keys)}"
+            wave_rows.append((u, b, k, sk))
+    if i % 6 == 5:
+        return None, wave_rows
+    prior_urls = rng.sample([f"https://h/u{j:02d}" for j in range(8)], rng.randint(0, 4))
+    prior = [
+        (u, b, f"k{rng.randint(0, n_keys + 3)}")
+        for u in prior_urls
+        for b in range(4)
+        if rng.random() < 0.6
+    ]
+    return prior, wave_rows
+
+
+def test_wave_flags_match_brute_force_spec(spark):
+    """wave_flags(bands=...) equals the brute-force spec on fixed-seed
+    random cases mixing prior-wave and same-wave matches: sort-key ties,
+    urls both in the prior index and in the wave, one key held by every
+    wave url, an empty prior index and no prior index at all."""
+    import random
+
+    from newscrawl import dedupgate
+
+    rng = random.Random(20261019)
+    for i in range(12):
+        prior, wave_rows = _random_gate_case(rng, i)
+        bands = spark.createDataFrame(
+            wave_rows, "url string, band int, key string, sort_key string"
+        )
+        prior_df = (
+            None
+            if prior is None
+            else spark.createDataFrame(
+                [r + ("w0000",) for r in prior],
+                "url string, band int, key string, wave_id string",
+            )
+        )
+        flags, kept, _ = dedupgate.wave_flags(None, prior_df, bands=bands)
+        want_flags, want_kept = _flags_spec(prior, wave_rows)
+        assert _flags_set(flags) == want_flags, (i, prior, wave_rows)
+        assert {(r.url, r.band, r.key) for r in kept.collect()} == want_kept, i
+        flags.unpersist()
+
+
+def test_failed_gate_write_unpersists_flags(spark, tmp_path, monkeypatch):
+    """A wave whose minhash_bands write raises still unpersists every
+    frame it cached, the near-dup flags included: a retried wave (the
+    streaming path) must not accrete cached flag frames."""
+    from newscrawl.storage import WaveCommit
+
+    real_write = WaveCommit.write
+
+    def write(self, table, df, mode="append"):
+        if table == "minhash_bands":
+            raise RuntimeError("injected minhash_bands write failure")
+        return real_write(self, table, df, mode)
+
+    pages = synth.build_pages_df(spark, CFG, num_partitions=4)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(WaveCommit, "write", write)
+    cat = ManifestParquetCatalog(str(tmp_path / "failed"))
+    with pytest.raises(RuntimeError, match="injected"):
+        wave.run_crawl(spark, cat, CFG, n_waves=1, pages=pages, dedup_gate="flag")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached

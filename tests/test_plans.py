@@ -249,6 +249,40 @@ def test_dedup_gate_probe_broadcasts_new_side(spark, tmp_path):
     cached.unpersist()
 
 
+def test_dedup_gate_flags_plan_is_one_earliest_holder_pass(spark, tmp_path):
+    """The broadcast-path flags plan asks each (band, key) for its
+    earliest holder once: the prior semi-filter is its only join, and it
+    shuffles at most twice (the per-key window, the per-url aggregate) —
+    counted in the final adaptive plan after the flags ran."""
+    import re
+
+    from newscrawl import dedupgate
+
+    prior_dir = str(tmp_path / "prior_bands")
+    spark.createDataFrame(
+        [(f"https://h/{i}", i % 4, f"k{i % 7}", "w0000") for i in range(100)],
+        "url string, band int, key string, wave_id string",
+    ).write.parquet(prior_dir)
+    bands = spark.createDataFrame(
+        [(f"https://h/new{i}", b, f"k{(i + b) % 9}", f"s{i % 3}")
+         for i in range(6) for b in range(4)],
+        "url string, band int, key string, sort_key string",
+    )
+    flags, _kept, _ = dedupgate.wave_flags(
+        None, spark.read.parquet(prior_dir), bands=bands
+    )
+    # the same plan uncached, so the executed plan is the probe itself
+    # rather than a scan of the persisted flags
+    flags.unpersist()
+    probe = flags.select(*flags.columns)
+    assert probe.collect()
+    plan = _plan(probe)
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert len(re.findall(r"Exchange hashpartitioning", final)) <= 2, final
+    assert len(re.findall(r"Join ", final)) == 1, final
+    assert "BroadcastHashJoin" in final, final
+
+
 def test_bm25_topk_is_take_ordered(spark):
     """The BM25 top-k must be a TakeOrderedAndProject (bounded partial
     top-k per partition), never a global Sort of the scored set."""

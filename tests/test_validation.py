@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from newscrawl import dedupgate, seenset, streaming
+from newscrawl import dedupgate, seenset, streaming, wave
 from newscrawl.storage import ManifestParquetCatalog
 
 
@@ -41,6 +41,18 @@ def _remote_stream_checkpoint(spark, tmp_path):
     streaming.stream_crawl(spark, None, str(tmp_path), "hdfs://nn:8020/ckpt")
 
 
+def _unknown_probe_mode_without_prior(spark, tmp_path):
+    dedupgate.wave_flags(None, None, probe="Broadcast", bands=None)
+
+
+def _unknown_dedup_gate_mode(spark, tmp_path):
+    wave.run_wave(spark, ManifestParquetCatalog(str(tmp_path)), None, 0, dedup_gate="Drop")
+
+
+def _unknown_scheduler(spark, tmp_path):
+    wave.run_wave(spark, ManifestParquetCatalog(str(tmp_path)), None, 0, scheduler="Scaled")
+
+
 @pytest.mark.parametrize(
     "call",
     [
@@ -50,6 +62,9 @@ def _remote_stream_checkpoint(spark, tmp_path):
         _cuckoo_buckets_not_power_of_two,
         _srp_embedding_dim,
         _remote_stream_checkpoint,
+        _unknown_probe_mode_without_prior,
+        _unknown_dedup_gate_mode,
+        _unknown_scheduler,
     ],
     ids=lambda f: f.__name__.strip("_"),
 )
