@@ -858,8 +858,16 @@ def _propagate_clusters(spark, sf_dir, docs):
         .repartition("doc_a")
         .persist()
     )
-    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().withColumn(
-        "label", F.col("doc_id")
+    # labels start with round 1 applied: every doc's label is the min of
+    # its own id and its neighbours' (edges are symmetric) — one groupBy
+    # over the doc_a-partitioned edges instead of a join + groupBy round
+    labels = (
+        edges.groupBy("doc_a")
+        .agg(F.min("doc_b").alias("_m"))
+        .select(
+            F.col("doc_a").alias("doc_id"), F.least("doc_a", "_m").alias("label")
+        )
+        .localCheckpoint()
     )
 
     # One propagation round per materialized step (a lazily-chained
@@ -874,6 +882,10 @@ def _propagate_clusters(spark, sf_dir, docs):
     # per round (2.7 s -> 1.45 s measured, identical output).
     from pyspark.sql import Observation
 
+    # The seed above is round 1; the loop runs rounds 2, 3, ... until
+    # one changes nothing, which only confirms the fixpoint.  Near-dup
+    # components are shallow: at sf0.01 (largest cluster 3 docs) every
+    # label settles in round 1, so the loop runs once.
     for _round in range(24):  # >= any near-dup component diameter
         msgs = edges.join(
             labels, edges.doc_a == labels.doc_id, "inner"
@@ -2175,16 +2187,178 @@ def _assign_to_centroids(emb, cents_df):
     )
 
 
+def _spark_round(x, scale):
+    """Spark's ``round(x, scale)`` of a double, in Python: HALF_UP of
+    the value's decimal string (Scala ``BigDecimal(d)`` parses
+    ``Double.toString(d)``), not of its exact binary value — Spark
+    rounds 0.1234565 to 0.123457 and 5e-7 to 1e-6 at scale 6.  NaN and
+    infinities pass through; ``+ 0.0`` turns Python's -0.0 into the
+    +0.0 Spark returns (BigDecimal has no signed zero).
+
+    ``repr`` is the shortest round-tripping decimal string.  JDK 17's
+    ``Double.toString`` is not always the shortest (fixed in JDK 19), so
+    one case stays open: a double whose JDK 17 string carries extra
+    digits where the shortest one ends exactly on a half at ``scale``
+    (say "…5" against "…4999999999999999") rounds up here and down in
+    Spark."""
+    import math
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    if x is None or math.isnan(x) or math.isinf(x):
+        return x
+    ctx = Context(prec=400, rounding=ROUND_HALF_UP)  # 1e308 at any scale
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), context=ctx)
+    return float(q) + 0.0
+
+
+def _fold_dot(u, v):
+    """_vec_dot in Python: a left fold in double, None wherever the
+    JVM fold meets a NULL (a NULL array or element, or unequal lengths,
+    which zip_with pads with NULLs)."""
+    if u is None or v is None or len(u) != len(v):
+        return None
+    acc = 0.0
+    for x, y in zip(u, v):
+        if x is None or y is None:
+            return None
+        acc += x * y
+    return acc
+
+
+def _fold_norm(u):
+    import math
+
+    d = _fold_dot(u, u)
+    return None if d is None else math.sqrt(d)
+
+
+def _lloyd_winner(embs, cents):
+    """The (row index, cent_id) that _assign_to_centroids picks for one
+    vec_id: ``embs`` are the embeddings sharing that vec_id, ``cents``
+    the centroids as sorted (cent_id, cvec, norm) triples.  Ranks every
+    (row, centroid) pair by round(cos, 6) descending — NaN first, NULL
+    last, as Spark orders doubles — then by cent_id; a tie between rows
+    goes to the first (Spark's row_number picks any).  A zero norm
+    product under a non-NULL dot raises ValueError where the ANSI
+    session raises DIVIDE_BY_ZERO (a NULL dot over it is a NULL score,
+    as Spark's Divide never evaluates the zero then).  None without
+    centroids or rows."""
+    import math
+
+    best = None
+    for i, e in enumerate(embs):
+        ne = _fold_norm(e)
+        for cid, cvec, nc in cents:
+            div = None if ne is None or nc is None else ne * nc
+            d = None if div is None else _fold_dot(e, cvec)
+            if d is not None and div == 0.0:
+                raise ValueError(f"k-means: zero-norm vector or centroid {cid}")
+            s = None if d is None else _spark_round(d / div, 6)
+            if s is None:
+                key = (2, 0.0, cid)
+            else:
+                key = (0, 0.0, cid) if math.isnan(s) else (1, -s, cid)
+            if best is None or key < best[0]:
+                best = (key, i, cid)
+    return None if best is None else best[1:]
+
+
+def _lloyd_kernel(cents):
+    """mapInArrow body of one Lloyd iteration over (vec_id, embs) rows:
+    each vec_id's winning row adds its non-NULL elements (dim <
+    EMB_DIM) to its bucket's per-dim count and sum; one (bucket, n[dim],
+    s[dim]) partial per bucket and partition goes out."""
+    import pyarrow as pa
+
+    cn = [(cid, cvec, _fold_norm(cvec)) for cid, cvec in sorted(cents.items())]
+    out_schema = pa.schema(
+        [
+            ("bucket", pa.int64()),
+            ("n", pa.list_(pa.int64())),
+            ("s", pa.list_(pa.float64())),
+        ]
+    )
+
+    def kernel(batches):
+        acc: dict[int, tuple[list[int], list[float]]] = {}
+        for batch in batches:
+            for embs in batch.column("embs").to_pylist():
+                won = _lloyd_winner(embs, cn)
+                if won is None:
+                    continue
+                n, s = acc.setdefault(won[1], ([0] * EMB_DIM, [0.0] * EMB_DIM))
+                for d, x in enumerate(embs[won[0]][:EMB_DIM]):
+                    if x is not None:
+                        n[d] += 1
+                        s[d] += x
+        yield pa.RecordBatch.from_pydict(
+            {
+                "bucket": list(acc),
+                "n": [v[0] for v in acc.values()],
+                "s": [v[1] for v in acc.values()],
+            },
+            schema=out_schema,
+        )
+
+    return kernel
+
+
+def _lloyd_update(cents, partials):
+    """Merge the kernel's partials into the next centroids: a dim's
+    new value is round(sum/count, 4) + 0.0 over its non-NULL elements,
+    and a dim no element reached (count 0) keeps its old value — the
+    oracle's coalesce(m.val, p.val)."""
+    tot: dict[int, tuple[list[int], list[float]]] = {}
+    for r in partials:
+        n, s = tot.setdefault(int(r.bucket), ([0] * EMB_DIM, [0.0] * EMB_DIM))
+        for d in range(EMB_DIM):
+            n[d] += r.n[d]
+            s[d] += r.s[d]
+    nxt = {}
+    for cid, vals in cents.items():
+        n, s = tot.get(cid, ([0] * EMB_DIM, None))
+        nxt[cid] = [
+            _spark_round(s[d] / n[d], 4) if n[d] else vals[d] for d in range(EMB_DIM)
+        ]
+    return nxt
+
+
+def _lloyd_step(staged, cents):
+    """One Lloyd iteration over (vec_id, embs) rows: one Spark job."""
+    partials = staged.mapInArrow(
+        _lloyd_kernel(cents), "bucket long, n array<long>, s array<double>"
+    ).collect()
+    return _lloyd_update(cents, partials)
+
+
+def _centroid_frame(spark, cents):
+    """{cent_id: [dim values]} as a (cent_id long, cvec array<double>)
+    frame built from a pyarrow Table: a LocalRelation, no Python RDD."""
+    import pyarrow as pa
+
+    ids = sorted(cents)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "cent_id": pa.array(ids, pa.int64()),
+                "cvec": pa.array([cents[c] for c in ids], pa.list_(pa.float64())),
+            }
+        )
+    )
+
+
 def _kmeans_train_centroids(spark, sf_dir, n_iters=N_KMEANS_ITERS):
-    """Distributed Lloyd iterations with the canonical driver sync: the
-    assignment and the per-(bucket,dim) mean run as Spark jobs; only the
-    K x dim centroid matrix (512 doubles — bounded regardless of corpus
-    size, same shape as Spark MLlib's KMeans) crosses to the driver
-    between iterations. Returns {cent_id: [dim values]}, a fresh copy
+    """Distributed Lloyd iterations in MLlib's treeAggregate shape: the
+    embeddings are staged once, grouped by vec_id, and each iteration
+    is ONE mapInArrow job that assigns every vec_id to its nearest
+    centroid and sends per-partition (bucket, count[dim], sum[dim])
+    partials to the driver; only those and the K x dim centroid matrix
+    (512 doubles — bounded regardless of corpus size) cross between
+    driver and executors. Returns {cent_id: [dim values]}, a fresh copy
     of the session-memoized centroids: training is deterministic in its
-    inputs, and three queries (kmeans_train, knn_ivf_trained,
-    knn_recall_trained) share it. Seeds are vec_id 1..K quantized
-    exactly like every later iterate."""
+    inputs, and four queries (kmeans_train, knn_ivf_trained,
+    knn_recall_trained, semantic_dedup) share it. Seeds are vec_id 1..K
+    quantized exactly like every later iterate."""
     cents = session_memo(
         spark,
         "kmeans_centroids",
@@ -2212,26 +2386,19 @@ def _kmeans_lloyd(spark, sf_dir, n_iters):
     cents: dict[int, list[float]] = {}
     for r in seed.collect():
         cents.setdefault(int(r.cent_id), [0.0] * EMB_DIM)[r.dim] = r.val
-    for _ in range(n_iters):
-        cents_df = spark.createDataFrame(
-            [(cid, vals) for cid, vals in sorted(cents.items())],
-            "cent_id long, cvec array<double>",
-        )
-        assigned = _assign_to_centroids(emb, cents_df)
-        means = (
-            assigned.select("bucket", F.posexplode("embedding").alias("dim", "val"))
-            .groupBy("bucket", "dim")
-            .agg(
-                (F.round(F.avg(F.col("val").cast("double")), 4) + F.lit(0.0)).alias(
-                    "centroid"
-                )
-            )
-        )
-        got = {(int(r.bucket), r.dim): r.centroid for r in means.collect()}
-        cents = {
-            cid: [got.get((cid, d), vals[d]) for d in range(EMB_DIM)]
-            for cid, vals in cents.items()
-        }
+    if not cents:
+        return cents
+    # rows sharing a vec_id (NULL included) yield ONE winner, as the
+    # window over vec_id does; collect_list drops NULL embeddings, which
+    # add nothing to a mean
+    staged = (
+        emb.groupBy("vec_id").agg(F.collect_list("embedding").alias("embs")).persist()
+    )
+    try:
+        for _ in range(n_iters):
+            cents = _lloyd_step(staged, cents)
+    finally:
+        staged.unpersist()
     return cents
 
 
@@ -2239,12 +2406,21 @@ def q_kmeans_train(spark, sf_dir):
     """k-means training to a fixed iteration count (the IVF index build
     closed end-to-end — q_kmeans_step is one link of this chain). Output
     exploded (bucket, dim, centroid) like kmeans_step so the oracle
-    compares scalars."""
+    compares scalars; the frame comes from a pyarrow Table (a
+    LocalRelation, no Python RDD)."""
+    import pyarrow as pa
+
     cents = _kmeans_train_centroids(spark, sf_dir)
-    rows = [
-        (cid, d, vals[d]) for cid, vals in sorted(cents.items()) for d in range(EMB_DIM)
-    ]
-    return spark.createDataFrame(rows, "bucket long, dim int, centroid double")
+    ids = sorted(cents)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "bucket": pa.array([c for c in ids for _ in cents[c]], pa.int64()),
+                "dim": pa.array(list(range(EMB_DIM)) * len(ids), pa.int32()),
+                "centroid": pa.array([v for c in ids for v in cents[c]], pa.float64()),
+            }
+        )
+    )
 
 
 def _sql_kmeans_train(n_iters: int = N_KMEANS_ITERS) -> str:
@@ -2293,11 +2469,7 @@ def q_knn_ivf_trained(spark, sf_dir):
     """IVF search over TRAINED centroids (q_kmeans_train's output)
     instead of the raw seed vectors — the production index build feeding
     the production search. Same bucket-local brute force as q_knn_ivf."""
-    cents = _kmeans_train_centroids(spark, sf_dir)
-    cents_df = spark.createDataFrame(
-        [(cid, vals) for cid, vals in sorted(cents.items())],
-        "cent_id long, cvec array<double>",
-    )
+    cents_df = _centroid_frame(spark, _kmeans_train_centroids(spark, sf_dir))
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned = _assign_to_centroids(emb, cents_df)
     qrow = emb.filter(F.col("vec_id") == 0).head()
@@ -3359,9 +3531,10 @@ def q_repetition_filter(spark, sf_dir):
     parallel (the first cut exploded ~500 bigram rows per doc into a
     two-stage string-keyed shuffle: 4.4 s vs 0.4 s at sf0.1, and the
     shuffle volume would scale with the corpus). The kernel emits RAW
-    float64 ratios; rounding happens JVM-side so the decimal-boundary
-    semantics (HALF_UP of the exact binary value) match the oracle
-    exactly — IEEE division of the same ints is identical in C and
+    float64 ratios; rounding happens JVM-side, so Spark's own round
+    (HALF_UP of the double's decimal string, not of its exact binary
+    value — see _spark_round) sets the decimal boundaries as in every
+    other query — IEEE division of the same ints is identical in C and
     Java, so the raw doubles agree bit-for-bit."""
     import re
 
@@ -4035,11 +4208,7 @@ def q_semantic_dedup(spark, sf_dir):
     blocking structure, so at 100 TB no task sees more than a cluster."""
 
     def assign():
-        cents = _kmeans_train_centroids(spark, sf_dir)
-        cents_df = spark.createDataFrame(
-            [(cid, vals) for cid, vals in sorted(cents.items())],
-            "cent_id long, cvec array<double>",
-        )
+        cents_df = _centroid_frame(spark, _kmeans_train_centroids(spark, sf_dir))
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         return _assign_to_centroids(emb, cents_df).persist()
 
@@ -6753,9 +6922,10 @@ def _logreg_feats(docs):
 
 
 def _logreg_train(spark, sf_dir):
-    """3 GD iterations; only the 3-weight vector (micro-int) crosses to
-    the driver per iteration — MLlib's treeAggregate shape.  The weight
-    tuple is session-memoized per corpus."""
+    """LOGREG_ITERS GD iterations over features staged once; each
+    iteration is one observed pass, and only the 3 gradient sums and
+    the count (micro-int) cross to the driver — MLlib's treeAggregate
+    shape.  The weight tuple is session-memoized per corpus."""
     return session_memo(
         spark, "logreg_weights", lambda: _logreg_fit(spark, sf_dir), sf_dir
     )
@@ -6764,34 +6934,46 @@ def _logreg_train(spark, sf_dir):
 def _logreg_fit(spark, sf_dir):
     import math
 
-    feats = _logreg_feats(_t(spark, sf_dir, "documents"))
-    w = [0, 0, 0]
-    for _ in range(LOGREG_ITERS):
-        z = (
-            F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        ) / F.lit(1000000.0)
-        s = F.lit(0.5) + z / (F.lit(2.0) * (F.lit(1.0) + F.abs(z)))
-        e = s - F.col("y")
-        row = feats.agg(
-            F.sum(F.floor(e * F.lit(1000000.0)).cast("long")).alias("g0"),
-            F.sum(
-                F.floor((e * F.col("x1")) * F.lit(1000000.0)).cast("long")
-            ).alias("g1"),
-            F.sum(
-                F.floor((e * F.col("x2")) * F.lit(1000000.0)).cast("long")
-            ).alias("g2"),
-            F.count("*").alias("n"),
-        ).first()
-        n = int(row.n)
-        if n == 0:  # empty corpus: gradient undefined, keep seed weights
-            break
-        # an all-NULL feature row contributes nothing to the gradient
-        # sums (they come back NULL) but still counts in n — coalesce
-        # to a zero gradient rather than crash on int(None)
-        w = [
-            w[k] - math.floor(LOGREG_LR * float(int(row[f"g{k}"] or 0)) / n)
-            for k in range(3)
-        ]
+    from pyspark.sql import Observation
+
+    # persisted once, so no iteration re-scans documents or re-splits
+    # a text
+    feats = _logreg_feats(_t(spark, sf_dir, "documents")).persist()
+    try:
+        w = [0, 0, 0]
+        for it in range(LOGREG_ITERS):
+            z = (
+                F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
+            ) / F.lit(1000000.0)
+            s = F.lit(0.5) + z / (F.lit(2.0) * (F.lit(1.0) + F.abs(z)))
+            e = s - F.col("y")
+            # one job per iteration: the sums ride a noop write as an
+            # Observation (the idiom of _propagate_clusters)
+            obs = Observation(f"logreg_{it}_{id(feats)}")
+            feats.observe(
+                obs,
+                F.sum(F.floor(e * F.lit(1000000.0)).cast("long")).alias("g0"),
+                F.sum(
+                    F.floor((e * F.col("x1")) * F.lit(1000000.0)).cast("long")
+                ).alias("g1"),
+                F.sum(
+                    F.floor((e * F.col("x2")) * F.lit(1000000.0)).cast("long")
+                ).alias("g2"),
+                F.count("*").alias("n"),
+            ).write.format("noop").mode("overwrite").save()
+            row = obs.get
+            n = int(row["n"])
+            if n == 0:  # empty corpus: gradient undefined, keep seed weights
+                break
+            # an all-NULL feature row contributes nothing to the gradient
+            # sums (they come back NULL) but still counts in n — coalesce
+            # to a zero gradient rather than crash on int(None)
+            w = [
+                w[k] - math.floor(LOGREG_LR * float(int(row[f"g{k}"] or 0)) / n)
+                for k in range(3)
+            ]
+    finally:
+        feats.unpersist()
     return tuple(w)
 
 
@@ -6799,9 +6981,10 @@ def q_logreg_quality(spark, sf_dir):
     """Classifier-based quality filtering, trained end-to-end: fit the
     deterministic logistic model against the n_chars >= 250 heuristic
     label, then report the confusion matrix plus the learned weights
-    (micro-int).  Training is 3 bounded-state aggregation jobs; scoring
-    is one map-side pass — at 100 TB the score column rides the page
-    scan exactly like q_quality_score."""
+    (micro-int).  Training is LOGREG_ITERS (6) observed passes, one
+    Spark job each, over features staged once; scoring is one map-side
+    pass — at 100 TB the score column rides the page scan exactly like
+    q_quality_score."""
     w0, w1, w2 = _logreg_train(spark, sf_dir)
     feats = _logreg_feats(_t(spark, sf_dir, "documents"))
     z = F.lit(w0) + F.lit(w1) * F.col("x1") + F.lit(w2) * F.col("x2")

@@ -278,9 +278,11 @@ def main() -> None:
             "logreg_quality",
             "Trained quality classifier scoring pass: the learned "
             "weights are literals in a single map-side Project + one "
-            "4-row aggregation; training ran as 6 bounded-state "
-            "aggregation jobs (3 BIGINT gradient sums each) before "
-            "this plan was built.",
+            "4-row aggregation; training ran before this plan was "
+            "built, as 6 passes over features persisted once, one "
+            "Spark job each: every pass is a noop write that carries "
+            "its 3 BIGINT gradient sums and the row count as an "
+            "Observation.",
         ),
     ]:
         fn, _sql = QUERIES[name]

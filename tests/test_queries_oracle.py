@@ -1,7 +1,8 @@
 """Mimic the driver's correctness gate: run each queries() entry on
 Spark and its oracle_sql() on DuckDB at sf0.01, compare row count,
 column names, and order-insensitive values (exact, like a value hash).
-The MinHash-family queries are also compared at sf0.001 and sf0.1.
+The MinHash-family and trained-model queries are also compared at
+sf0.001 and sf0.1.
 """
 
 from __future__ import annotations
@@ -95,6 +96,21 @@ def test_minhash_family_matches_oracle_across_scales(spark, sf, name):
         con.execute(f"CREATE TEMP TABLE cand AS {SQL_MINHASH_LSH_CANDIDATES}")
         sql = sql.replace(SQL_MINHASH_LSH_CANDIDATES, "SELECT * FROM cand")
     _assert_matches_oracle(spark, con, sf_dir, name, sql)
+
+
+# the k-means family (the Lloyd loop and the queries that search or
+# cluster with its trained centroids) and the GD-trained classifier
+TRAINED_FAMILY = (
+    "kmeans_train", "knn_ivf_trained", "knn_recall_trained",
+    "semantic_dedup", "logreg_quality",
+)
+
+
+@pytest.mark.parametrize("name", TRAINED_FAMILY)
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
+def test_trained_family_matches_oracle_across_scales(spark, sf, name):
+    sf_dir = f"{SF_DIR.rsplit('/', 1)[0]}/{sf}"
+    _assert_matches_oracle(spark, _duck(sf_dir), sf_dir, name)
 
 
 # dsir_importance's output is round(avg(lr), 4): a doc whose float
