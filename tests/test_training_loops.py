@@ -23,9 +23,23 @@ ROUND_VALUES = [
 ]
 
 
+def _round_sample():
+    """Doubles that sit on a decimal half at scale 6 or 4, means of
+    float32 values (what the kernel rounds) and values across scales."""
+    rng = random.Random(11)
+    out = list(ROUND_VALUES)
+    for _ in range(400):
+        k = rng.randrange(-(10**7), 10**7)
+        out += [(2 * k + 1) / 2 * 1e-6, (2 * k + 1) / 2 * 1e-4]
+        n = rng.randrange(1, 40)
+        out.append(sum(_f32(rng.uniform(-1, 1)) for _ in range(n)) / n)
+        out.append(rng.uniform(-1, 1) * 10 ** rng.randrange(-12, 12))
+    return out
+
+
 @pytest.mark.parametrize("scale", [4, 6])
 def test_spark_round_matches_f_round(spark, scale):
-    df = spark.createDataFrame([(v,) for v in ROUND_VALUES], "x double")
+    df = spark.createDataFrame([(v,) for v in _round_sample()], "x double")
     got = df.select("x", F.round("x", scale).alias("r")).collect()
     # repr tells -0.0 from 0.0 and compares NaN
     want = [repr(r.r) for r in got]
@@ -102,8 +116,10 @@ def test_lloyd_winner_matches_assign_to_centroids(spark):
     assert {v[1] for v in got.values() if v is not None} == {1, 2, 6, 7}
 
 
-def test_lloyd_step_matches_posexplode_avg(spark):
-    rows, cents, emb = _fixture(spark)
+def _jvm_step(spark, emb, cents):
+    """One Lloyd iteration on the JVM path: _assign_to_centroids, then
+    the posexplode avg per (bucket, dim).  A NULL mean keeps the old
+    value, the oracle's coalesce(m.val, p.val)."""
     assigned = Q._assign_to_centroids(emb, Q._centroid_frame(spark, cents))
     means = (
         assigned.select("bucket", F.posexplode("embedding").alias("dim", "val"))
@@ -111,22 +127,64 @@ def test_lloyd_step_matches_posexplode_avg(spark):
         .agg((F.round(F.avg(F.col("val").cast("double")), 4) + F.lit(0.0)).alias("m"))
         .collect()
     )
-    got_means = {(r.bucket, r.dim): r.m for r in means}
-    # a NULL mean keeps the old value: the oracle's coalesce(m.val, p.val)
-    want = {
+    got = {(r.bucket, r.dim): r.m for r in means}
+    return {
         cid: [
-            vals[d] if got_means.get((cid, d)) is None else got_means[(cid, d)]
+            vals[d] if got.get((cid, d)) is None else got[(cid, d)]
             for d in range(Q.EMB_DIM)
         ]
         for cid, vals in cents.items()
     }
+
+
+def _kernel_step(emb, cents):
     staged = emb.groupBy("vec_id").agg(F.collect_list("embedding").alias("embs"))
-    got = Q._lloyd_step(staged, cents)
-    assert {c: [repr(x) for x in v] for c, v in got.items()} == {
-        c: [repr(x) for x in v] for c, v in want.items()
-    }
+    return Q._lloyd_step(staged, cents)
+
+
+def _reprs(cents):
+    return {c: [repr(x) for x in v] for c, v in cents.items()}
+
+
+def test_lloyd_step_matches_posexplode_avg(spark):
+    rows, cents, emb = _fixture(spark)
+    got = _kernel_step(emb, cents)
+    assert _reprs(got) == _reprs(_jvm_step(spark, emb, cents))
     assert got[5] == cents[5]  # emptied cluster keeps its centroid
+    # bucket 1's only member is NULL at dim 1: the centroid keeps its
+    # value there (a loop that took the NULL avg wrote NULL into it)
     assert got[1][1] == cents[1][1] and got[1][0] != cents[1][0]
+
+
+def test_lloyd_kernel_matches_jvm_on_tied_scores(spark):
+    """Vectors on a coarse grid in 3 dims: many (vector, centroid)
+    pairs score alike, so the cent_id tie-break decides often; a
+    duplicated centroid ties every pair exactly.  Three iterations."""
+    rng = random.Random(5)
+    grid = [-1.0, -0.5, 0.0, 0.5, 1.0]
+
+    def vec():
+        v = [rng.choice(grid) for _ in range(3)] + [0.0] * (Q.EMB_DIM - 3)
+        v[rng.randrange(3)] = 1.0  # never a zero norm
+        return v
+
+    emb = spark.createDataFrame(
+        [(i, vec()) for i in range(300)], "vec_id bigint, embedding array<float>"
+    ).cache()
+    cents = {c: vec() for c in range(1, 8)}
+    cents[8] = list(cents[3])
+    cn = [(c, v, Q._fold_norm(v)) for c, v in sorted(cents.items())]
+    ref = Q._assign_to_centroids(emb, Q._centroid_frame(spark, cents)).collect()
+    assert {r.vec_id: Q._lloyd_winner([r.embedding], cn)[1] for r in ref} == {
+        r.vec_id: r.bucket for r in ref
+    }
+    try:
+        for _ in range(Q.N_KMEANS_ITERS):
+            got = _kernel_step(emb, cents)
+            assert _reprs(got) == _reprs(_jvm_step(spark, emb, cents))
+            cents = got
+    finally:
+        emb.unpersist()
 
 
 def test_lloyd_winner_raises_on_zero_norm():
