@@ -86,6 +86,40 @@ def test_drop_mode_withholds_article_but_not_seen(spark, tmp_path, wave_urls):
     assert bands.filter(F.col("url") == src_url).count() == 4
 
 
+def test_drop_mode_is_flag_mode_minus_flagged_urls(spark, tmp_path, wave_urls):
+    """Both gate modes write articles in the same fused job: over two
+    waves of the doctored corpus, drop mode's articles are flag mode's
+    minus the near_dup_flags urls, and the gate and crawl state tables
+    are equal between the modes."""
+    from newscrawl.schema import FRONTIER, MINHASH_BANDS
+
+    _src, dup_url, pages = wave_urls
+    cats = {}
+    for mode in ("flag", "drop"):
+        cats[mode] = ManifestParquetCatalog(str(tmp_path / mode))
+        wave.run_crawl(spark, cats[mode], CFG, n_waves=2, pages=pages, dedup_gate=mode)
+
+    def rows(df):
+        return sorted((r[0], repr(r)) for r in df.collect())
+
+    def state(c):
+        return {
+            "near_dup_flags": rows(wave.read_near_dup_flags(spark, c)),
+            "minhash_bands": rows(c.read(spark, "minhash_bands", MINHASH_BANDS)),
+            "seen": rows(wave.read_seen(spark, c)),
+            "frontier": rows(c.read(spark, "frontier", FRONTIER)),
+        }
+
+    flag = state(cats["flag"])
+    assert flag == state(cats["drop"])
+    flagged = {url for url, _r in flag["near_dup_flags"]}
+    assert dup_url in flagged
+    flag_arts = rows(wave.read_articles(spark, cats["flag"]))
+    assert rows(wave.read_articles(spark, cats["drop"])) == [
+        a for a in flag_arts if a[0] not in flagged
+    ]
+
+
 def test_gate_off_is_unchanged_and_gate_without_dups_is_noop(
     spark, tmp_path, wave_urls
 ):

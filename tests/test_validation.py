@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from newscrawl import dedupgate, seenset, streaming, wave
+from newscrawl import dedupgate, seenset, streaming, synth, wave
 from newscrawl.storage import ManifestParquetCatalog
 
 
@@ -53,6 +53,14 @@ def _unknown_scheduler(spark, tmp_path):
     wave.run_wave(spark, ManifestParquetCatalog(str(tmp_path)), None, 0, scheduler="Scaled")
 
 
+def _nonpositive_budget(spark, tmp_path):
+    # the int budget the CLI's --budget passes; a per-host budget table
+    # is not checked
+    wave.run_crawl(
+        spark, ManifestParquetCatalog(str(tmp_path)), synth.SynthConfig(), budget=0
+    )
+
+
 @pytest.mark.parametrize(
     "call",
     [
@@ -65,6 +73,7 @@ def _unknown_scheduler(spark, tmp_path):
         _unknown_probe_mode_without_prior,
         _unknown_dedup_gate_mode,
         _unknown_scheduler,
+        _nonpositive_budget,
     ],
     ids=lambda f: f.__name__.strip("_"),
 )

@@ -194,3 +194,22 @@ def test_pluggable_enrichment_fn(spark, tmp_path):
     # extraction itself is untouched: text still byte-identical
     for a in arts:
         assert a.text == synth.page_for_url(a.url, cfg).text
+
+
+def test_failed_fetch_leaves_no_cache_or_candidate_table(spark, tmp_path):
+    """A wave that fails after persisting its candidates (here the
+    bucketed fetch names a missing pages table, after the candidate
+    table is written) unpersists every frame it cached and drops its
+    newscrawl_cand_* table."""
+    from pyspark.errors import AnalysisException
+
+    def cand_tables():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith("newscrawl_cand_")]
+
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = cand_tables()
+    cat = ManifestParquetCatalog(str(tmp_path / "c"))
+    with pytest.raises(AnalysisException):
+        wave.run_wave(spark, cat, None, 0, budget=3, pages_table="no_such_pages_table")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert cand_tables() == before
